@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["key_frequency_sketch", "salt_plan", "apply_salt_scatter",
-           "apply_salt_replicate", "salted_equi_join"]
+           "apply_salt_replicate", "salted_equi_join", "hot_key_plan",
+           "candidate_join"]
 
 
 def key_frequency_sketch(df: DataFrame, key: str, sample_frac: float | None = None) -> DataFrame:
@@ -84,6 +85,53 @@ def apply_salt_replicate(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
             ).otherwise(F.array(F.lit(0)))
         ),
     ).drop("salt_factor")
+
+
+def hot_key_plan(
+    freq: DataFrame, key: str,
+    hot_threshold: int = 100_000, target_per_salt: int = 50_000,
+) -> DataFrame | None:
+    """The persisted salt plan of a (key, key_count) sketch, or None when no
+    key is hot.
+
+    Runs ONE eager job (the `isEmpty()` probe) when called, i.e. when the
+    query is built: the salt/no-salt choice is frozen into the plan that
+    uses the result.  The probe materializes the persisted plan that the
+    salted join's broadcast reads anyway, so it adds no scan of its own.
+    With no hot key, salting would tag every row with salt 0 and reproduce
+    the plain join at the cost of two broadcast joins and a Generate, so
+    callers join unsalted instead."""
+    plan = salt_plan(freq, key, hot_threshold, target_per_salt).persist()
+    if plan.isEmpty():
+        plan.unpersist()
+        return None
+    return plan
+
+
+def candidate_join(
+    probe: DataFrame, build: DataFrame, key: str,
+    broadcast: bool = False, salt: DataFrame | None = None,
+) -> DataFrame:
+    """The one join-strategy switch of the cell-term candidate stage: an
+    inner equi-join on `key` (one output `key` column).
+
+    * `broadcast`: the build side is broadcast (the reference's in-memory
+      R-tree build side) and `salt` is ignored;
+    * otherwise hash-partitioned on `key`;
+    * with a `salt` plan from :func:`hot_key_plan`, hash-partitioned on
+      (`key`, `__salt`): probe rows of a hot key scatter over its salts,
+      build rows replicate to all of them.
+
+    Whether to salt is decided before this call, by `hot_key_plan`'s
+    plan-time job, and stays fixed for the returned DataFrame even if the
+    data it sketched changes."""
+    if broadcast:
+        return probe.join(F.broadcast(build), key)
+    if salt is None:
+        return probe.join(build, key)
+    p = apply_salt_scatter(probe, key, salt)
+    b = apply_salt_replicate(build, key, salt)
+    return p.join(b, [key, "__salt"]).drop("__salt")
 
 
 def salted_equi_join(
