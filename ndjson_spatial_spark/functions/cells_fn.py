@@ -1,4 +1,5 @@
-"""Cell-index column functions (pandas UDFs over the numpy cell kernels).
+"""Cell-index column functions: pandas UDFs over the numpy cell kernels,
+and pure-Catalyst expressions where they are bit-exact with them.
 
 These are the engine's H3/S2-style primitives (BASELINE.json north star):
 every geometry gets a sorted cell-index column; candidate spatial joins are
@@ -20,8 +21,7 @@ from .geo import geom_to_batch
 
 __all__ = ["st_geohash", "decode_geohash", "GEOHASH_BASE32",
            "st_hex_index", "hex_center_expr",
-           "st_cell_of_point", "make_st_cells", "make_st_cells_terms",
-           "make_st_cells_terms_expr",
+           "st_cell_of_point", "make_st_cells",
            "make_ring_cells", "make_disk_cells", "tile_bounds_expr",
            "cell_id_expr"]
 
@@ -44,12 +44,11 @@ def _unit_v_expr(y_col):
 
 
 def st_cell_of_point(x_col, y_col, res: int):
-    """Level-`res` cell id of mercator point columns — pure Catalyst
-    (round-6; was a pandas UDF).  Bit-exact twin of
-    kernels.cells.point_cells: same unit_xy clip, same floor-to-tile,
-    same Morton encoding (cell_id_expr), but whole-stage codegen'd with
-    no Python worker round-trip (guide §4.1: built-ins over UDFs).
-    Equivalence is pinned by test_cells_fn's expr-vs-kernel sweep."""
+    """Level-`res` cell id of mercator point columns — pure Catalyst.
+    Bit-exact with kernels.cells.point_cells: same unit_xy clip, same
+    floor-to-tile, same Morton encoding (cell_id_expr), but whole-stage
+    codegen'd with no Python worker round-trip.  Equivalence is pinned by
+    test_mixed_resolution's expr-vs-kernel sweep."""
     scale = F.lit(float(1 << res))
     tx = F.floor(_unit_u_expr(x_col) * scale).cast("long")
     ty = F.floor(_unit_v_expr(y_col) * scale).cast("long")
@@ -78,151 +77,6 @@ def make_st_cells(res: int, cap: int = 256):
         return pd.Series(out)
 
     return st_cells
-
-
-def make_st_cells_terms(res: int, cap: int = 256, min_res: int | None = None,
-                        anc_levels=()):
-    """Returns st_cells_terms(geom) -> struct<cov:array<long>,
-    anc:array<long>, res_used:int> — the join-term generator.
-
-    `cov` is the bbox cover at `res`, coarsened by the `cap` guard but
-    never below `min_res` (default res-6).  `anc` holds the cover's unique
-    ancestor cells at each level in `anc_levels` (strictly below the row's
-    res_used).  Spatial joins combine cov/anc terms so covers at MIXED
-    resolutions still meet on an equi-join — the covering+ancestor-terms
-    scheme (see kernels.cells.cover_ancestors); plain same-res covers pay
-    zero ancestor overhead when `anc_levels` is empty.
-    """
-    if min_res is None:
-        min_res = max(0, res - 6)
-    anc_levels = [int(l) for l in anc_levels]
-    out_type = T.StructType([
-        T.StructField("cov", T.ArrayType(T.LongType())),
-        T.StructField("anc", T.ArrayType(T.LongType())),
-        T.StructField("res_used", T.IntegerType()),
-    ])
-
-    @pandas_udf(out_type)
-    def st_cells_terms(geom: pd.DataFrame) -> pd.DataFrame:
-        n = len(geom)
-        cov = [None] * n
-        anc = [None] * n
-        ru = np.full(n, res, np.int32)
-        bg, valid = geom_to_batch(geom)
-        if bg.n_rows:
-            is_pt = np.zeros(bg.n_rows, bool)
-            bb = KG.batch_bbox(bg, is_pt)
-            covers, res_used = KC.bbox_cells(
-                bb[:, 0], bb[:, 2], bb[:, 1], bb[:, 3], res,
-                cap=cap, min_res=min_res,
-            )
-            ancs = (KC.cover_ancestors(covers, res_used, anc_levels)
-                    if anc_levels else None)
-            for j, i in enumerate(np.flatnonzero(valid)):
-                cov[i] = [int(c) for c in covers[j]]
-                anc[i] = ([int(c) for c in ancs[j]] if ancs is not None else [])
-                ru[i] = int(res_used[j])
-        return pd.DataFrame({"cov": cov, "anc": anc, "res_used": ru})
-
-    return st_cells_terms
-
-
-def make_st_cells_terms_expr(res: int, cap: int = 256,
-                             min_res: int | None = None, anc_levels=()):
-    """Pure-Catalyst twin of :func:`make_st_cells_terms` (round-6).
-
-    Returns terms(geom_col) -> struct<cov:array<long>, anc:array<long>,
-    res_used:int> computing the SAME values as the pandas-UDF form
-    (pinned by test_cells_fn's expr-vs-kernel sweep; ancestor arrays are
-    set-equal — enumeration order differs, which no consumer observes:
-    covers feed explode / array_intersect / array_min only):
-
-      * bbox from array_min/max over the geometry's coordinate arrays
-        (== batch_bbox with is_point=False);
-      * res_used by the kernel's descending coarsen scan — the first
-        level in [res .. min_res] whose bbox tile count fits `cap`,
-        floored at min_res, as a plan-time `when` cascade (res - min_res
-        branches, each a handful of long ops);
-      * cover = the bbox tile range at res_used enumerated y-outer /
-        x-inner (sequence + transform; bounded by `cap`), Morton-encoded
-        by cell_id_expr;
-      * ancestors at each constant level l < res_used = the bbox tile
-        range at l (identical as a SET to np.unique(cell_parent(cov, l)):
-        parents of a contiguous tile range form the contiguous parent
-        range, floor-nesting makes the direct trunc(u * 2^l) equal to the
-        shifted tiles).
-
-    Why: the UDF form moved every geometry struct JVM->Python->JVM just
-    to compute ~a dozen longs per row (ArrowEvalPython on both sides of
-    every spatial join — measured 3.4 s for a 20k-row ref side at bench
-    scale); this form stays inside codegen (the per-cell lambda is an
-    interpreted HOF, but bounded by `cap` elements over scalar longs).
-    Rows with a null/empty coordinate array yield null cov/anc and
-    res_used = `res`, matching the UDF's invalid-row contract.
-    """
-    if min_res is None:
-        min_res = max(0, res - 6)
-    anc_levels = sorted({int(l) for l in anc_levels})
-
-    def terms(g):
-        minx, maxx = F.array_min(g["x"]), F.array_max(g["x"])
-        miny, maxy = F.array_min(g["y"]), F.array_max(g["y"])
-        u0, v0 = _unit_u_expr(minx), _unit_v_expr(maxy)
-        u1, v1 = _unit_u_expr(maxx), _unit_v_expr(miny)
-
-        # all level-dependent pieces take the LEVEL AS A COLUMN (one
-        # expression tree total, not one per level — an unrolled
-        # per-level cascade measured ~10 s of py4j/analyzer time per
-        # query build); 2^r stays exact via a long shiftleft then an
-        # exact int->double cast
-        def scale_of(rcol):
-            return F.call_function(
-                "shiftleft", F.lit(1).cast("long"), rcol).cast("double")
-
-        def rng(rcol):
-            sc = scale_of(rcol)
-            return ((u0 * sc).cast("long"), (u1 * sc).cast("long"),
-                    (v0 * sc).cast("long"), (v1 * sc).cast("long"))
-
-        def cells_at(rcol):
-            tx0, tx1, ty0, ty1 = rng(rcol)
-            return F.flatten(F.transform(
-                F.sequence(ty0, ty1),
-                lambda dy: F.transform(
-                    F.sequence(tx0, tx1),
-                    lambda dx: cell_id_expr(dx, dy, rcol))))
-
-        def cnt(rcol):
-            tx0, tx1, ty0, ty1 = rng(rcol)
-            return (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-
-        # the kernel's descending first-fit coarsen scan == the LARGEST
-        # fitting level (tile counts are monotone non-increasing as the
-        # level coarsens: floor-halving never widens a range)
-        ru = F.array_max(F.filter(
-            F.sequence(F.lit(min_res), F.lit(res)),
-            lambda r: (cnt(r) <= F.lit(cap)) | (r == F.lit(min_res))))
-        cov = cells_at(ru)
-
-        if anc_levels:
-            lv_arr = F.array(*[F.lit(int(l)) for l in anc_levels])
-            anc = F.flatten(F.transform(
-                lv_arr,
-                lambda l: F.when(l < ru, cells_at(l))
-                .otherwise(F.array().cast("array<long>"))))
-        else:
-            anc = F.array().cast("array<long>")
-
-        valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-        na = F.lit(None).cast("array<long>")
-        return F.struct(
-            F.when(valid, cov).otherwise(na).alias("cov"),
-            F.when(valid, anc).otherwise(na).alias("anc"),
-            F.when(valid, ru).otherwise(F.lit(res)).cast("int")
-            .alias("res_used"),
-        )
-
-    return terms
 
 
 def cell_id_expr(tx_col, ty_col, res_col):
@@ -375,7 +229,7 @@ GEOHASH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
 def decode_geohash(df, gh_col: str, precision: int = 9):
-    """Inverse of st_geohash (round-4): appends the geohash cell bbox
+    """Inverse of st_geohash: appends the geohash cell bbox
     columns ``lon_min, lat_min, lon_max, lat_max`` — PURE Catalyst,
     whole-stage codegen'd.
 
@@ -451,7 +305,7 @@ def decode_geohash(df, gh_col: str, precision: int = 9):
 
 def st_geohash(lon_col, lat_col, precision: int = 9):
     """Standard geohash string of (lon, lat) degree columns, PURE Catalyst
-    (round-4 engine extension — the interchange cell id every geo stack
+    (engine extension — the interchange cell id every geo stack
     speaks, complementing the engine's internal web-mercator Morton ids).
 
     Closed form instead of the textbook bisection loop: the geohash is the

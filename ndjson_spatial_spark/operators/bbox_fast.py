@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells_fn import cell_id_expr
 from ..kernels.cells import MERC_MAX
+from ..plans.salting import candidate_join, hot_key_plan, key_frequency_sketch
 
 __all__ = ["flat_bbox", "is_bbox_shape", "bbox_intersection_join",
            "assign_tiles_bbox"]
@@ -110,21 +111,20 @@ def bbox_intersection_join(
     __imaxy + __ipt (a point iff either side is a point).  Boundary
     semantics match the struct operator's fast paths exactly: rect-rect
     requires strictly positive overlap, point-in-rect is closed.
+
+    Join strategy as in spatial_intersection_join: ``salt_hot_cells``
+    (ignored with ``broadcast_ref``) sketches every stream cell and runs
+    one plan-time `hot_key_plan` job; with no hot cell it joins unsalted.
     """
     s = _with_cover(stream, res, "__b", "__s")
-    r = _with_cover(ref, res, "__r", "__q")
+    r = _with_cover(ref, res, "__r", "__q").withColumnRenamed(
+        "__qcell", "__scell")
 
-    if broadcast_ref:
-        j = s.join(F.broadcast(r), F.col("__scell") == F.col("__qcell"))
-    elif salt_hot_cells:
-        from ..plans.salting import salted_equi_join
-
-        j = salted_equi_join(
-            s, r.withColumnRenamed("__qcell", "__scell"), "__scell",
-            hot_threshold, target_per_salt,
-        )
-    else:
-        j = s.join(r, F.col("__scell") == F.col("__qcell"))
+    salt = None
+    if salt_hot_cells and not broadcast_ref:
+        freq = key_frequency_sketch(s.select("__scell"), "__scell")
+        salt = hot_key_plan(freq, "__scell", hot_threshold, target_per_salt)
+    j = candidate_join(s, r, "__scell", broadcast_ref, salt)
 
     # exactly-once pair dedup: a pair shares the rectangle of cells
     # [max(tx0s, tx0r) ..] x [max(ty0s, ty0r) ..]; keep only its corner

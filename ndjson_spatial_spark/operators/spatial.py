@@ -31,6 +31,7 @@ from ..functions.cells_fn import (
     cell_id_expr,
     make_st_cells_bounds_multi,
 )
+from ..plans.salting import candidate_join, hot_key_plan
 
 
 def _is_axis_rect(g, minx=None, maxx=None, miny=None, maxy=None) -> "F.Column":
@@ -519,9 +520,7 @@ def auto_resolution(
     res = _auto_resolution_uncached(df, geom_col, target_cells,
                                     sample_rows, default)
     if key is not None:
-        if len(_RES_CACHE) >= 256:
-            _RES_CACHE.clear()
-        _RES_CACHE[key] = res
+        _cache_put(_RES_CACHE, key, res)
     return res
 
 
@@ -574,25 +573,26 @@ def _term_anc(c):
 
 def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
                 min_res: int, anc_levels, keep_bbox: bool = False) -> DataFrame:
-    # round-6: pure-Catalyst terms (guide §4.1) — the pandas-UDF form
-    # shipped every geometry struct JVM->Python->JVM on BOTH sides of
-    # every spatial join just to compute ~a dozen longs per row.
+    # Appends the join terms of `geom_col`: __cov (the bbox cover at
+    # `res`, coarsened by the `cap` guard but never below `min_res`), __anc
+    # (the cover's ancestor cells at each level of `anc_levels` below the
+    # row's resolution) and __res_used.  A null or empty geometry gives
+    # null __cov/__anc and __res_used == res.  Values equal kernels.cells
+    # bbox_cells + cover_ancestors: __cov and __res_used bit-exact, __anc
+    # as a set (pinned by test_mixed_resolution).
     #
-    # Round-6b STAGING: the one-big-expression form re-derived its scalar
-    # subtrees (coordinate array scans, unit coords, the res_used coarsen
-    # scan, tile ranges) on EVERY reference — HOFs evaluate interpreted,
-    # with no common-subexpression elimination, so a 20k-row ref side
-    # nooped at ~5.5 s.  Here every scalar lands as a real column in a
-    # narrow projection chain (bbox -> unit coords -> res_used -> tile
-    # range) and the per-cell lambdas read row ATTRIBUTES; Catalyst's
-    # CollapseProject keeps multi-referenced non-trivial aliases staged,
-    # so each scalar is evaluated once per row.  Values are bit-exact vs
-    # make_st_cells_terms_expr / the numpy kernels (pinned by
-    # test_mixed_resolution's sweeps).
+    # Pure Catalyst and STAGED: higher-order functions evaluate
+    # interpreted, with no common-subexpression elimination, so one big
+    # expression would re-derive its scalar subtrees (coordinate array
+    # scans, unit coords, the res_used coarsen scan, tile ranges) on every
+    # reference.  Here every scalar lands as a real column in a narrow
+    # projection chain (bbox -> unit coords -> res_used -> tile range) and
+    # the per-cell lambdas read row ATTRIBUTES; Catalyst's CollapseProject
+    # keeps multi-referenced non-trivial aliases staged, so each scalar is
+    # evaluated once per row.
     #
     # ``keep_bbox``: also emit __bb_minx/__bb_maxx/__bb_miny/__bb_maxy so
-    # the caller's per-side shape metadata reuses the staged array scans
-    # instead of recomputing them (spatial_intersection_join does).
+    # the caller's per-side shape metadata reuses the staged array scans.
     c = _terms_cols(geom_col, res, cap, min_res,
                     tuple(sorted({int(l) for l in anc_levels})))
     base = list(df.columns)
@@ -605,47 +605,56 @@ def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
     return st.select(*keep, *c["out"])
 
 
+def _cache_put(cache: dict, key, value):
+    if len(cache) >= 256:
+        cache.clear()
+    cache[key] = value
+    return value
+
+
 def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
                 anc_levels: tuple) -> dict:
     """The staged-terms Column bundle, memoized per (geom_col, res, cap,
     min_res, anc_levels) — Columns are immutable name-resolved trees, and
     building the per-cell Morton lambdas costs ~1 s of py4j round trips
     per spatial-join construction otherwise."""
-    from ..functions.cells_fn import _unit_u_expr, _unit_v_expr
-
     key = (geom_col, res, cap, min_res, anc_levels)
     got = _TERMS_COLS_CACHE.get(key)
     if got is not None:
         return got
-    g = F.col(geom_col)
-    bbox = [
-        F.array_min(g["x"]).alias("__bb_minx"),
-        F.array_max(g["x"]).alias("__bb_maxx"),
-        F.array_min(g["y"]).alias("__bb_miny"),
-        F.array_max(g["y"]).alias("__bb_maxy"),
-    ]
     # everything below the bbox stage references only the staged column
     # NAMES, so the (large) cov/anc/ru trees are shared across geometry
     # columns — a second geom_col only rebuilds the two cheap stages
     core_key = (res, cap, min_res, anc_levels)
     core = _TERMS_CORE_CACHE.get(core_key)
-    if core is not None:
-        valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-        na = F.lit(None).cast("array<long>")
-        cols = {
-            "bbox": bbox, "uv": core["uv"], "ru": core["ru"],
-            "tiles": core["tiles"],
-            "out": [
-                F.when(valid, core["cov"]).otherwise(na).alias("__cov"),
-                F.when(valid, core["anc"]).otherwise(na).alias("__anc"),
-                F.when(valid, F.col("__ru")).otherwise(F.lit(res))
-                .cast("int").alias("__res_used"),
-            ],
-        }
-        if len(_TERMS_COLS_CACHE) >= 256:
-            _TERMS_COLS_CACHE.clear()
-        _TERMS_COLS_CACHE[key] = cols
-        return cols
+    if core is None:
+        core = _cache_put(_TERMS_CORE_CACHE, core_key,
+                          _terms_core(res, cap, min_res, anc_levels))
+    g = F.col(geom_col)
+    valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
+    na = F.lit(None).cast("array<long>")
+    return _cache_put(_TERMS_COLS_CACHE, key, {
+        "bbox": [
+            F.array_min(g["x"]).alias("__bb_minx"),
+            F.array_max(g["x"]).alias("__bb_maxx"),
+            F.array_min(g["y"]).alias("__bb_miny"),
+            F.array_max(g["y"]).alias("__bb_maxy"),
+        ],
+        "uv": core["uv"], "ru": core["ru"], "tiles": core["tiles"],
+        "out": [
+            F.when(valid, core["cov"]).otherwise(na).alias("__cov"),
+            F.when(valid, core["anc"]).otherwise(na).alias("__anc"),
+            F.when(valid, F.col("__ru")).otherwise(F.lit(res)).cast("int")
+            .alias("__res_used"),
+        ],
+    })
+
+
+def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple) -> dict:
+    # the geometry-independent stages: unit coords, res_used, tile ranges,
+    # and the cov/anc arrays over those columns
+    from ..functions.cells_fn import _unit_u_expr, _unit_v_expr
+
     uv = [
         _unit_u_expr(F.col("__bb_minx")).alias("__u0"),
         _unit_v_expr(F.col("__bb_maxy")).alias("__v0"),
@@ -686,6 +695,9 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
             F.sequence(F.col("__tx0"), F.col("__tx1")),
             lambda dx: cell_id_expr(dx, dy, F.col("__ru")))))
 
+    # ancestors at a constant level l < res_used = the bbox tile range at
+    # l: as a SET this equals the parents of the cover cells (parents of a
+    # contiguous tile range form the contiguous parent range)
     if anc_levels:
         def cells_at_level(lv):
             lc = F.lit(int(lv))
@@ -703,28 +715,8 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
         ]))
     else:
         anc = F.array().cast("array<long>")
-
-    if len(_TERMS_CORE_CACHE) >= 256:
-        _TERMS_CORE_CACHE.clear()
-    _TERMS_CORE_CACHE[core_key] = {
-        "uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
-        "cov": cov, "anc": anc,
-    }
-    valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-    na = F.lit(None).cast("array<long>")
-    cols = {
-        "bbox": bbox, "uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
-        "out": [
-            F.when(valid, cov).otherwise(na).alias("__cov"),
-            F.when(valid, anc).otherwise(na).alias("__anc"),
-            F.when(valid, F.col("__ru")).otherwise(F.lit(res)).cast("int")
-            .alias("__res_used"),
-        ],
-    }
-    if len(_TERMS_COLS_CACHE) >= 256:
-        _TERMS_COLS_CACHE.clear()
-    _TERMS_COLS_CACHE[key] = cols
-    return cols
+    return {"uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
+            "cov": cov, "anc": anc}
 
 
 _TERMS_COLS_CACHE: dict = {}
@@ -797,10 +789,17 @@ def spatial_intersection_join(
     shared term — pure JVM array ops, exactly-once per pair, and in the
     broadcast case the whole candidates+refinement path is shuffle-free
     (narrow over the stream's partitioning).
+
+    Join strategy (plans.salting.candidate_join): broadcast, else
+    hash-partitioned on the term, salted on hot terms with
+    ``salt_hot_cells`` (ignored when ``broadcast_ref=True``).  Salting is
+    decided while this function runs: `hot_key_plan` runs one eager job
+    over a ``sketch_sample_frac`` sample of the stream (all of it when
+    None), and its choice is frozen into the returned DataFrame.
     """
-    # GeometryCollections auto-explode to member rows on BOTH sides
-    # (round-4): the overlay kernel operates on simple geometries (GC ->
-    # null, which would silently drop data).  `gc_members_expr` is pure
+    # GeometryCollections auto-explode to member rows on BOTH sides: the
+    # overlay kernel operates on simple geometries (GC -> null, which
+    # would silently drop data).  `gc_members_expr` is pure
     # Catalyst, so non-GC corpora pay one string-prefix test per row and
     # a 1-element-array Generate — no Python, no second scan.  A GC stream
     # row yields one output row per (member, ref) hit, geometry replaced
@@ -841,21 +840,20 @@ def spatial_intersection_join(
         "__res_used": "__ref_res_used",
     })
 
-    # ---- per-SIDE shape metadata (round-6, guide §2.3: project before
-    # the exchange).  The refinement below needs, per candidate pair, the
-    # shape class (point / axis-rect / other) and the bbox of each side.
-    # Computing those on the JOINED rows evaluated `_is_axis_rect` (two
-    # interpreted `forall` HOFs) plus four array_min/max per side PER
-    # CANDIDATE — at ~200 candidates per input row that is 200x the
-    # necessary work.  One narrow projection per side (5 scalar columns,
-    # 40 bytes) rides the explode + join instead; for Points the bbox
-    # degenerates to the point, so the fast-path predicates below need no
-    # element_at.  kind codes: 0 = point, 1 = axis rect, 2 = other
-    # (null geometry classifies 2 -> slow path, as before).
+    # ---- per-SIDE shape metadata, projected before the exchange.  The
+    # refinement below needs, per candidate pair, the shape class (point /
+    # axis-rect / other) and the bbox of each side.  Computed on the
+    # JOINED rows, `_is_axis_rect` (two interpreted `forall` HOFs) plus
+    # four array_min/max per side would run PER CANDIDATE (~200 per input
+    # row); one narrow projection per side (5 scalar columns, 40 bytes)
+    # rides the explode + join instead.  For Points the bbox degenerates
+    # to the point, so the fast-path predicates below need no element_at.
+    # kind codes: 0 = point, 1 = axis rect, 2 = other (null geometry
+    # classifies 2 -> slow path).
     def _side_meta(df, gcol, p):
-        # round-6b: the bbox columns are the ones _with_terms already
-        # staged (keep_bbox=True) — renamed, not recomputed; the rect test
-        # compares against them as attributes
+        # the bbox columns are the ones _with_terms staged (keep_bbox=True)
+        # — renamed, not recomputed; the rect test compares against them
+        # as attributes
         g = F.col(gcol)
         bb = [F.col(c) for c in
               ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
@@ -869,8 +867,8 @@ def spatial_intersection_join(
         })
 
     r_t = _side_meta(r_t, "__ref_geom", "r")
-    # round-6b: materialize the ref terms frame ONCE.  The ref side (the
-    # reference's in-memory R-tree build side) otherwise re-evaluates its
+    # Materialize the ref terms frame ONCE.  The ref side (the reference's
+    # in-memory R-tree build side) would otherwise re-evaluate its
     # geometry parse + cover computation per CONSUMER: the coarse-levels
     # probe plus one evaluation per per-kind sub-join exchange/broadcast
     # — 3-4x per query.  The checkpoint is private to this invocation
@@ -919,20 +917,19 @@ def spatial_intersection_join(
         )
     else:
         r_terms = F.concat(F.col("__ref_cov"), F.col("__ref_anc"))
-    # round-6b: explode an ATTRIBUTE, not the term expression itself —
-    # Catalyst's InferFiltersFromGenerate adds a `size(gen) > 0` filter
-    # below every explode, and with the expression inline that filter
-    # re-evaluated the ENTIRE terms computation (geometry parse UDF
+    # Explode an ATTRIBUTE, not the term expression itself: Catalyst's
+    # InferFiltersFromGenerate adds a `size(gen) > 0` filter below every
+    # explode, and with the expression inline that filter would
+    # re-evaluate the ENTIRE terms computation (geometry parse UDF
     # included) once more per row; staged as a column, the inferred
     # filter tests a cheap attribute and the terms run once.
     s_c = s_t.withColumn("__term", F.explode(s_terms))
     r_c = r_t.withColumn("__term", F.explode(r_terms))
 
-    # round-6b: split each SIDE by shape kind BEFORE the join.  The
-    # fast/slow refinement split below previously filtered the JOINED
-    # candidates twice, so the candidate join (the widest stage of the
-    # query) executed once per branch — only its shuffle write was
-    # reused.  Pairs partition disjointly by (stream kind, ref kind):
+    # Split each SIDE by shape kind BEFORE the join: filtering the JOINED
+    # candidates per refinement branch would execute the candidate join
+    # (the widest stage of the query) once per branch, reusing only its
+    # shuffle write.  Pairs partition disjointly by (stream kind, ref kind):
     # the all-fast join runs exactly once, and the three sub-joins that
     # involve a general-shape side are EMPTY whenever the corpus is all
     # points/rects (their inputs are subset filters whose exchanges are
@@ -943,15 +940,13 @@ def spatial_intersection_join(
     r_s = r_c.where(F.col("__r_kind") == 2)
 
     # exactly-once pair dedup: keep the match whose join term is the
-    # smallest ENUMERATED shared term (the three disjoint sets above).
-    # Round-6 short-circuit: a stream row with exactly ONE term (a point's
-    # single level-res cell, no ancestors — the dominant point-stream
-    # shape) can meet a given ref row at most once, because the ref side's
-    # enumerated terms (cov + distinct-level ancestors) are pairwise
-    # distinct — so the pair is trivially unique and the per-candidate
-    # array_intersect/array_min work is skipped (Or short-circuits in
-    # codegen; on the 7M-candidate salted bench every candidate takes the
-    # cheap branch).
+    # smallest ENUMERATED shared term (the three disjoint sets above).  A
+    # stream row with exactly ONE term (a point's single level-res cell, no
+    # ancestors — the dominant point-stream shape) meets a given ref row at
+    # most once, because the ref side's enumerated terms (cov +
+    # distinct-level ancestors) are pairwise distinct — so such a pair is
+    # unique and skips the per-candidate array_intersect/array_min work
+    # (Or short-circuits in codegen).
     min_common = F.array_min(F.concat(
         F.array_intersect("__cov", "__ref_cov"),
         F.array_intersect("__cov", "__ref_anc"),
@@ -960,87 +955,38 @@ def spatial_intersection_join(
     single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
     drop_cols = ["__term", "__cov", "__anc", "__res_used",
                  "__ref_cov", "__ref_anc", "__ref_res_used"]
-    if broadcast_ref:
-        def cand_of(ssub, rsub):
-            j = ssub.alias("s").join(
-                F.broadcast(rsub.alias("r")),
-                F.col("s.__term") == F.col("r.__term"), "inner")
-            return j.where(
-                single_term | (F.col("s.__term") == min_common)
-            ).drop(*drop_cols)
-    elif salt_hot_cells:
-        # 100 TB path: hash-partitioned cell join with EXPLICIT hot-cell
-        # salting (north rule) layered over AQE's skew splitting — geographic
-        # cell frequencies are Zipfian, so a handful of city cells would
-        # otherwise own whole tasks.
-        from ..plans.salting import (
-            apply_salt_replicate,
-            apply_salt_scatter,
-            key_frequency_sketch,
-            salt_plan,
-        )
 
-        # The sketch must NOT be a second full pass over the exploded
-        # candidate stream (the widest intermediate in the job — at 100 TB
-        # that would materialize it twice, cover UDF included).  Sample the
-        # STREAM BEFORE the cover computation: the sample runs the terms
-        # UDF over sketch_sample_frac of the rows only, counts are scaled
-        # back up, and hot-key detection only needs order-of-magnitude
-        # accuracy (a >hot_threshold key still has ~frac*threshold >> 1
-        # sampled occurrences).
-        if sketch_sample_frac and sketch_sample_frac < 1.0:
-            sk_t = _with_terms(
-                stream.select(geom_col).sample(sketch_sample_frac, seed=42),
-                geom_col, res, cap, min_res, r_levels,
-            )
-            freq = (
-                sk_t.select(F.explode(s_terms).alias("__term"))
-                .groupBy("__term")
-                .agg((F.count(F.lit(1)) / F.lit(sketch_sample_frac))
-                     .cast("long").alias("key_count"))
-            )
-        else:
-            freq = key_frequency_sketch(s_c.select("__term"), "__term")
-        # the salt plan (hot keys only — tiny by construction) feeds the
-        # per-kind sub-joins; persist so the sketch runs once
-        plan = salt_plan(freq, "__term", hot_threshold, target_per_salt) \
-            .persist()
-        # round-6b: when the sketch finds NO hot keys (the common
-        # non-Zipfian or small-input case) the whole scatter/replicate
-        # apparatus — two broadcast joins, a per-row rand, a Generate on
-        # the build side — would salt everything with the constant 0,
-        # i.e. reproduce the plain term join at pure overhead.  The
-        # emptiness probe materializes the (persisted) plan the broadcast
-        # would have materialized anyway, so detection costs nothing
-        # extra, and hot inputs take the salted branch exactly as before.
-        if plan.isEmpty():
-            def cand_of(ssub, rsub):
-                j = ssub.alias("s").join(
-                    rsub.alias("r"),
-                    F.col("s.__term") == F.col("r.__term"), "inner")
-                return j.where(
-                    single_term | (F.col("s.__term") == min_common)
-                ).drop(*drop_cols)
-        else:
-            def cand_of(ssub, rsub):
-                sj = apply_salt_scatter(ssub, "__term", plan)
-                rj = apply_salt_replicate(rsub, "__term", plan)
-                j = sj.join(rj, ["__term", "__salt"], "inner").drop("__salt")
-                return j.where(
-                    single_term | (F.col("__term") == min_common)
-                ).drop(*drop_cols)
-    else:
-        def cand_of(ssub, rsub):
-            j = ssub.alias("s").join(
-                rsub.alias("r"),
-                F.col("s.__term") == F.col("r.__term"), "inner")
-            return j.where(
-                single_term | (F.col("s.__term") == min_common)
-            ).drop(*drop_cols)
+    salt = None
+    if salt_hot_cells and not broadcast_ref:
+        # The sketch samples the STREAM BEFORE the cover computation, so it
+        # is not a second full pass over the exploded candidate stream (the
+        # widest intermediate in the job): the terms run over
+        # sketch_sample_frac of the rows only (all rows when None), counts
+        # are scaled back up, and hot-key detection only needs
+        # order-of-magnitude accuracy (a >hot_threshold key still has
+        # ~frac*threshold >> 1 sampled occurrences).
+        frac = min(sketch_sample_frac or 1.0, 1.0)
+        sk = stream.select(geom_col)
+        if frac < 1.0:
+            sk = sk.sample(frac, seed=42)
+        freq = (
+            _with_terms(sk, geom_col, res, cap, min_res, r_levels)
+            .select(F.explode(s_terms).alias("__term"))
+            .groupBy("__term")
+            .agg((F.count(F.lit(1)) / F.lit(frac))
+                 .cast("long").alias("key_count"))
+        )
+        salt = hot_key_plan(freq, "__term", hot_threshold, target_per_salt)
+
+    def cand_of(ssub, rsub):
+        j = candidate_join(ssub, rsub, "__term", broadcast_ref, salt)
+        return j.where(
+            single_term | (F.col("__term") == min_common)
+        ).drop(*drop_cols)
 
     # ---- refinement: pure-Catalyst fast paths for the dominant shapes ----
-    # (round-6: all predicates read the per-side scalar metadata computed
-    # before the join — zero array ops per candidate on the fast paths)
+    # (all predicates read the per-side scalar metadata computed before
+    # the join — zero array ops per candidate on the fast paths)
     sg = F.col(geom_col)
     rg = F.col("__ref_geom")
     SK, RK = F.col("__s_kind"), F.col("__r_kind")
@@ -1359,20 +1305,72 @@ def _geom_contained_batch(key: pd.Series, g: pd.DataFrame,
 
 # ----------------------------------------------------------------- tiles
 
+def _ring_area_in_rect(xs, ys, is_rect, x0, y0, x1, y1) -> float:
+    """Area of one ring's interior inside the rect [x0, x1] x [y0, y1]."""
+    if is_rect:
+        w = min(xs.max(), x1) - max(xs.min(), x0)
+        h = min(ys.max(), y1) - max(ys.min(), y0)
+        return w * h if w > 0 and h > 0 else 0.0
+    cx, cy = KG.clip_ring_rect(xs, ys, x0, y0, x1, y1)
+    return abs(KG._signed_area(cx, cy)) if len(cx) >= 3 else 0.0
+
+
+def _polygon_hits_rects(xs, ys, ro, po, rx0, ry0, rx1, ry1) -> np.ndarray:
+    """Per rect: is the polygon's role-signed area inside it positive?"""
+    # (x, y, is axis rect, +1 first ring of a part / -1 any further ring)
+    rings = []
+    for p in range(len(po) - 1):
+        for r in range(po[p], po[p + 1]):
+            rx, ry = xs[ro[r]:ro[r + 1]], ys[ro[r]:ro[r + 1]]
+            rings.append((rx, ry, KG.ring_is_axis_rect(rx, ry),
+                          1.0 if r == po[p] else -1.0))
+    hit = np.zeros(len(rx0), bool)
+    if len(rings) == len(po) - 1:
+        # no hole rings: an axis-rect part hits every tile its bbox
+        # strictly overlaps (touch-only excluded)
+        for rx, ry, is_rect, _ in rings:
+            if is_rect:
+                hit |= ((rx.max() > rx0) & (rx.min() < rx1)
+                        & (ry.max() > ry0) & (ry.min() < ry1))
+    lv = np.nonzero(~hit & (xs.max() > rx0) & (xs.min() < rx1)
+                    & (ys.max() > ry0) & (ys.min() < ry1))[0]
+    if not len(lv):
+        return hit
+    # tile centre inside the polygon (even-odd over all rings, one kernel
+    # call for all live rects): the tile hits; the rest sum clipped areas
+    centers_in = KG.points_in_polygon(
+        (rx0[lv] + rx1[lv]) / 2.0, (ry0[lv] + ry1[lv]) / 2.0,
+        xs, ys, ro, po,
+    )
+    hit[lv[centers_in]] = True
+    for j in lv[~centers_in]:
+        area = 0.0
+        for rx, ry, is_rect, sign in rings:
+            area += sign * _ring_area_in_rect(
+                rx, ry, is_rect, rx0[j], ry0[j], rx1[j], ry1[j])
+        hit[j] = area > 0
+    return hit
+
+
 @pandas_udf(T.BooleanType())
 def _geom_intersects_rect(
     geom: pd.DataFrame, minx: pd.Series, miny: pd.Series,
     maxx: pd.Series, maxy: pd.Series,
 ) -> pd.Series:
-    """Exact geometry-vs-tile-rect test: positive-area clip, point-in-rect,
-    or rect-center-in-polygon (tile fully inside).  Boundary-touch-only
-    pairs are excluded (documented).
+    """Exact geometry-vs-tile-rect test: a polygon hits a tile iff its
+    role-signed area inside the tile is positive (each part's first ring
+    adds its clipped area, every further ring subtracts it — the even-odd
+    reading of holes and of _pair_intersection's parts, so a tile inside a
+    hole scores exactly 0; axis-rect rings clip in closed form, so a hole
+    clipping to the same rectangle as its exterior cancels exactly).
+    Points are half-open point-in-rect; lines use an exact segment-vs-rect
+    test.  Boundary-touch-only pairs are excluded (documented).
 
     Hot path at scale (one call per candidate (geometry, tile) pair), so:
     raw numpy column arrays (no pandas .iloc), a vectorized bbox pre-test,
-    an axis-rect fast path (overlap arithmetic only — the dominant shape
-    for bbox-like geometries), and a vectorized half-plane clipper
-    (kernels.clip_ring_rect) for general polygons.
+    exact shortcuts (axis-rect parts of hole-free polygons; tile centre
+    inside the polygon over all rings) and a vectorized half-plane clipper
+    (kernels.clip_ring_rect) for the remaining tiles.
     """
     n = len(geom)
     out = np.zeros(n, bool)
@@ -1396,68 +1394,41 @@ def _geom_intersects_rect(
 
     # non-points: tile candidates repeat the SAME geometry once per tile,
     # so group rows by geometry bytes and test each geometry against its
-    # whole rect set in vectorized kernel calls (round-2 shape was a
-    # per-row Python loop)
+    # whole rect set in vectorized kernel calls
     groups: dict = {}
     for i in range(n):
         gt = gts[i]
         if gt is None or gt == "Point":
             continue
         key = (gt, np.asarray(Xs[i], np.float64).tobytes(),
-               np.asarray(Ys[i], np.float64).tobytes())
+               np.asarray(Ys[i], np.float64).tobytes(),
+               np.asarray(ROs[i], np.int64).tobytes(),
+               np.asarray(POs[i], np.int64).tobytes())
         groups.setdefault(key, []).append(i)
 
-    for (gt, _, _), idx in groups.items():
+    for (gt, _, _, _, _), idx in groups.items():
         rows = np.asarray(idx)
         i0 = rows[0]
         xs = np.asarray(Xs[i0], np.float64)
         ys = np.asarray(Ys[i0], np.float64)
+        ro = np.asarray(ROs[i0], np.int64)
         rx0, ry0, rx1, ry1 = x0[rows], y0[rows], x1[rows], y1[rows]
         if gt not in ("Polygon", "MultiPolygon"):
             # LineString-ish: exact segment-vs-rect test (a long segment
             # crossing the tile with no vertex inside still counts),
             # broadcast over all the geometry's candidate rects at once
-            ro_ = np.asarray(ROs[i0], np.int64)
             hit = np.zeros(len(rows), bool)
-            for r in range(len(ro_) - 1):
+            for r in range(len(ro) - 1):
                 hit |= KG.polyline_intersects_rects(
-                    xs[ro_[r]:ro_[r + 1]], ys[ro_[r]:ro_[r + 1]],
+                    xs[ro[r]:ro[r + 1]], ys[ro[r]:ro[r + 1]],
                     rx0, ry0, rx1, ry1,
                 )
                 if hit.all():
                     break
             out[rows] = hit
             continue
-        ro = np.asarray(ROs[i0], np.int64)
         po = np.asarray(POs[i0], np.int64)
-        hit = np.zeros(len(rows), bool)
-        for p in range(len(po) - 1):
-            r0 = po[p]
-            s, e = ro[r0], ro[r0 + 1]
-            sx, sy = xs[s:e], ys[s:e]
-            # bbox reject (strict: touch-only excluded), vector over rects
-            live = ~hit & ((sx.max() > rx0) & (sx.min() < rx1)
-                           & (sy.max() > ry0) & (sy.min() < ry1))
-            if not live.any():
-                continue
-            if KG.ring_is_axis_rect(sx, sy):
-                hit |= live  # bboxes strictly overlap and ring IS its bbox
-                continue
-            # tile-center PIP for ALL live rects in one kernel call (tile
-            # fully inside the ring); boundary-crossing tiles fall through
-            # to the positive-area clip
-            lv = np.nonzero(live)[0]
-            centers_in = KG.points_in_polygon(
-                (rx0[lv] + rx1[lv]) / 2.0, (ry0[lv] + ry1[lv]) / 2.0,
-                sx, sy, [0, len(sx)], [0, 1],
-            )
-            hit[lv[centers_in]] = True
-            for j in lv[~centers_in]:
-                cx, cy = KG.clip_ring_rect(sx, sy, rx0[j], ry0[j],
-                                           rx1[j], ry1[j])
-                if len(cx) >= 3 and abs(KG._signed_area(cx, cy)) > 0:
-                    hit[j] = True
-        out[rows] = hit
+        out[rows] = _polygon_hits_rects(xs, ys, ro, po, rx0, ry0, rx1, ry1)
     return pd.Series(out)
 
 

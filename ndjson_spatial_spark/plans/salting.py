@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["key_frequency_sketch", "salt_plan", "apply_salt_scatter",
-           "apply_salt_replicate", "salted_equi_join", "hot_key_plan",
-           "candidate_join"]
+           "apply_salt_replicate", "hot_key_plan", "candidate_join"]
 
 
 def key_frequency_sketch(df: DataFrame, key: str, sample_frac: float | None = None) -> DataFrame:
@@ -92,15 +91,9 @@ def hot_key_plan(
     hot_threshold: int = 100_000, target_per_salt: int = 50_000,
 ) -> DataFrame | None:
     """The persisted salt plan of a (key, key_count) sketch, or None when no
-    key is hot.
-
-    Runs ONE eager job (the `isEmpty()` probe) when called, i.e. when the
-    query is built: the salt/no-salt choice is frozen into the plan that
-    uses the result.  The probe materializes the persisted plan that the
-    salted join's broadcast reads anyway, so it adds no scan of its own.
-    With no hot key, salting would tag every row with salt 0 and reproduce
-    the plain join at the cost of two broadcast joins and a Generate, so
-    callers join unsalted instead."""
+    key is hot (salting would then only tag every row with salt 0).  Its
+    `isEmpty()` probe is ONE eager job when the query is built, so the
+    salt/no-salt choice is frozen into the plan that uses the result."""
     plan = salt_plan(freq, key, hot_threshold, target_per_salt).persist()
     if plan.isEmpty():
         plan.unpersist()
@@ -112,19 +105,12 @@ def candidate_join(
     probe: DataFrame, build: DataFrame, key: str,
     broadcast: bool = False, salt: DataFrame | None = None,
 ) -> DataFrame:
-    """The one join-strategy switch of the cell-term candidate stage: an
-    inner equi-join on `key` (one output `key` column).
-
-    * `broadcast`: the build side is broadcast (the reference's in-memory
-      R-tree build side) and `salt` is ignored;
-    * otherwise hash-partitioned on `key`;
-    * with a `salt` plan from :func:`hot_key_plan`, hash-partitioned on
-      (`key`, `__salt`): probe rows of a hot key scatter over its salts,
-      build rows replicate to all of them.
-
-    Whether to salt is decided before this call, by `hot_key_plan`'s
-    plan-time job, and stays fixed for the returned DataFrame even if the
-    data it sketched changes."""
+    """The candidate stage's one join-strategy switch, used by both spatial
+    joins: an inner equi-join on `key` with a broadcast build side (`salt`
+    ignored), else hash-partitioned on `key`, or on (`key`, `__salt`) with
+    a `hot_key_plan` salt plan (hot probe rows scatter over the salts,
+    build rows replicate to all).  That plan-time job made the salt choice,
+    and it stays fixed for the returned frame."""
     if broadcast:
         return probe.join(F.broadcast(build), key)
     if salt is None:
@@ -132,20 +118,3 @@ def candidate_join(
     p = apply_salt_scatter(probe, key, salt)
     b = apply_salt_replicate(build, key, salt)
     return p.join(b, [key, "__salt"]).drop("__salt")
-
-
-def salted_equi_join(
-    probe: DataFrame, build: DataFrame, key: str,
-    hot_threshold: int = 100_000, target_per_salt: int = 50_000,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join on `key`: sketch -> salt -> join on (key, salt).
-
-    Use for the cell-index candidate join when the ref side is too big to
-    broadcast and cell frequencies are Zipfian (hot-city cells)."""
-    freq = key_frequency_sketch(probe, key)
-    plan = salt_plan(freq, key, hot_threshold, target_per_salt)
-    p = apply_salt_scatter(probe, key, plan)
-    b = apply_salt_replicate(build, key, plan)
-    out = p.join(b, [key, "__salt"], how)
-    return out.drop("__salt")

@@ -192,12 +192,11 @@ class TestCoarsenedTiles:
             want = [int(v) for v in KC.point_cells(xs, ys, res)]
             assert got == want, res
 
-    def test_st_cells_terms_expr_matches_udf(self, spark):
-        # round-6: the join-term generator became pure Catalyst; cov and
-        # res_used must stay bit-exact vs the pandas-UDF/kernel form and
-        # anc set-equal (enumeration order is not observed by any consumer)
-        from ndjson_spatial_spark.functions.cells_fn import (
-            make_st_cells_terms, make_st_cells_terms_expr)
+    def test_with_terms_matches_kernels(self, spark):
+        # the join-term builder is pure Catalyst; cov and res_used must be
+        # bit-exact vs the numpy kernels and anc set-equal (enumeration
+        # order is not observed by any consumer)
+        from ndjson_spatial_spark.operators.spatial import _with_terms
 
         rng = np.random.default_rng(11)
         rows = []
@@ -213,25 +212,34 @@ class TestCoarsenedTiles:
         rows.append(("giant", gj("Polygon", rect(-KC.MERC_MAX, -KC.MERC_MAX,
                                                  KC.MERC_MAX, KC.MERC_MAX))))
         rows.append(("null", None))
-        df = geom_df(spark, rows)
-        res, cap = 12, 64
+        res, cap, min_res = 12, 64, 6
         anc_levels = range(6, 12)
-        udf = make_st_cells_terms(res, cap=cap, min_res=6,
-                                  anc_levels=anc_levels)
-        expr = make_st_cells_terms_expr(res, cap=cap, min_res=6,
-                                        anc_levels=anc_levels)
-        got = {r["id"]: r for r in df.select(
-            "id", expr(F.col("geom")).alias("t")).collect()}
-        want = {r["id"]: r for r in df.select(
-            "id", udf(F.col("geom")).alias("t")).collect()}
-        assert set(got) == set(want)
-        for k in want:
-            w, g = want[k]["t"], got[k]["t"]
-            assert g["res_used"] == w["res_used"], k
-            assert g["cov"] == w["cov"], k
-            wa = sorted(w["anc"]) if w["anc"] is not None else None
-            ga = sorted(g["anc"]) if g["anc"] is not None else None
-            assert ga == wa, k
+        got = {r["id"]: r for r in _with_terms(
+            geom_df(spark, rows), "geom", res, cap, min_res, anc_levels,
+            keep_bbox=True).collect()}
+        assert len(got) == 82
+
+        null = got.pop("null")
+        assert null["__cov"] is None and null["__anc"] is None
+        assert null["__res_used"] == res
+        ids = sorted(got)
+        xs = [got[k]["geom"]["x"] for k in ids]
+        ys = [got[k]["geom"]["y"] for k in ids]
+        minx = np.array([min(v) for v in xs])
+        maxx = np.array([max(v) for v in xs])
+        miny = np.array([min(v) for v in ys])
+        maxy = np.array([max(v) for v in ys])
+        covers, res_used = KC.bbox_cells(minx, miny, maxx, maxy, res,
+                                         cap=cap, min_res=min_res)
+        ancs = KC.cover_ancestors(covers, res_used, anc_levels)
+        assert (res_used < res).sum() >= 10  # coarsened rows are covered
+        for i, k in enumerate(ids):
+            g = got[k]
+            assert (g["__bb_minx"], g["__bb_maxx"], g["__bb_miny"],
+                    g["__bb_maxy"]) == (minx[i], maxx[i], miny[i], maxy[i])
+            assert g["__res_used"] == int(res_used[i]), k
+            assert g["__cov"] == [int(c) for c in covers[i]], k
+            assert sorted(g["__anc"]) == sorted(int(c) for c in ancs[i]), k
 
     def test_cell_id_expr_matches_kernel(self, spark):
         rng = np.random.default_rng(3)

@@ -13,9 +13,10 @@ from ndjson_spatial_spark.plans.metrics import (
     partition_histogram,
 )
 from ndjson_spatial_spark.plans.salting import (
+    candidate_join,
+    hot_key_plan,
     key_frequency_sketch,
     salt_plan,
-    salted_equi_join,
 )
 
 
@@ -43,9 +44,12 @@ class TestSalting:
         plain = skewed.join(build, "cell").agg(
             F.count(F.lit(1)).alias("n"), F.sum("payload").alias("s")
         ).collect()[0]
-        salted = salted_equi_join(
-            skewed, build, "cell", hot_threshold=1000, target_per_salt=1000
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("payload").alias("s")).collect()[0]
+        salt = hot_key_plan(key_frequency_sketch(skewed, "cell"), "cell",
+                            hot_threshold=1000, target_per_salt=1000)
+        assert salt is not None
+        salted = candidate_join(skewed, build, "cell", salt=salt).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("payload").alias("s")
+        ).collect()[0]
         assert (plain.n, plain.s) == (salted.n, salted.s)
 
     def test_salt_spreads_hot_key(self, spark, skewed):

@@ -226,6 +226,49 @@ class TestAssignTiles:
         out = assign_tiles(df, [1, 3]).collect()
         assert sorted(r.zoom for r in out) == [1, 3]
 
+    def test_tiles_inside_a_hole_are_not_assigned(self, spark):
+        from ndjson_spatial_spark.kernels import cells as KC
+        t = 2 * KC.MERC_MAX / 512  # zoom-9 tile size
+
+        def tx(k):
+            return -KC.MERC_MAX + k * t
+
+        def ty(k):  # top edge of tile row k
+            return KC.MERC_MAX - k * t
+
+        # exterior over tiles x 300..306, y 100..106 (edges mid-tile);
+        # hole edges halfway through tiles 301/305 and rows 101/105
+        ext = rect(tx(300.25), ty(106.75), tx(306.75), ty(100.25))[0]
+        hole = rect(tx(301.5), ty(105.5), tx(305.5), ty(101.5))[0][::-1]
+        df = geom_df(spark, [("donut", gj("Polygon", [ext, hole]))])
+        got = {(r.tile_x, r.tile_y) for r in assign_tiles(df, [9]).collect()}
+        inside_hole = {(x, y) for x in range(302, 305)
+                       for y in range(102, 105)}
+        assert (303, 103) not in got          # wholly inside the hole
+        assert (301, 103) in got              # straddles the hole's edge
+        assert got == {(x, y) for x in range(300, 307)
+                       for y in range(100, 107)} - inside_hole
+
+    def test_hole_sharing_exterior_edges_cancels(self, spark):
+        # the intersection of a rect with a rect-with-hole whose hole
+        # reaches past the rect: the clipped hole shares the exterior's
+        # top and right edges, so in tile (330, 189) both rings clip to
+        # the same rectangle and the polygon's area there is exactly 0
+        x0, y0 = 5762098.33987063, 5158582.993669093
+        x1, y1 = 5793757.40945242, 5166520.407137054
+        hx0, hy0 = 5771847.683128863, 5163237.879159795
+        ext = rect(x0, y0, x1, y1)[0]
+        hole = rect(hx0, hy0, x1, y1)[0][::-1]
+        ell = [[x0, y0], [x1, y0], [x1, hy0], [hx0, hy0], [hx0, y1],
+               [x0, y1], [x0, y0]]
+        df = geom_df(spark, [("holed", gj("Polygon", [ext, hole])),
+                             ("ell", gj("Polygon", [ell]))])
+        got = {}
+        for r in assign_tiles(df, [6, 9]).collect():
+            got.setdefault(r.id, set()).add((r.zoom, r.tile_x, r.tile_y))
+        assert (9, 330, 189) not in got["holed"]
+        assert got["holed"] == got["ell"]
+
 
 class TestAutoResolution:
     def test_scales_with_extent(self, spark):
