@@ -1305,33 +1305,37 @@ def _geom_contained_batch(key: pd.Series, g: pd.DataFrame,
 
 # ----------------------------------------------------------------- tiles
 
-def _ring_area_in_rect(xs, ys, is_rect, x0, y0, x1, y1) -> float:
-    """Area of one ring's interior inside the rect [x0, x1] x [y0, y1]."""
+def _ring_area_in_rect(xs, ys, bb, is_rect, x0, y0, x1, y1) -> float:
+    """Area of one ring's interior inside the rect [x0, x1] x [y0, y1];
+    `bb` is the ring's (minx, maxx, miny, maxy)."""
+    w = min(bb[1], x1) - max(bb[0], x0)
+    h = min(bb[3], y1) - max(bb[2], y0)
+    if w <= 0 or h <= 0:
+        return 0.0
     if is_rect:
-        w = min(xs.max(), x1) - max(xs.min(), x0)
-        h = min(ys.max(), y1) - max(ys.min(), y0)
-        return w * h if w > 0 and h > 0 else 0.0
+        return w * h
     cx, cy = KG.clip_ring_rect(xs, ys, x0, y0, x1, y1)
     return abs(KG._signed_area(cx, cy)) if len(cx) >= 3 else 0.0
 
 
 def _polygon_hits_rects(xs, ys, ro, po, rx0, ry0, rx1, ry1) -> np.ndarray:
     """Per rect: is the polygon's role-signed area inside it positive?"""
-    # (x, y, is axis rect, +1 first ring of a part / -1 any further ring)
+    # (x, y, bbox, is axis rect, +1 first ring of a part / -1 later rings)
     rings = []
     for p in range(len(po) - 1):
         for r in range(po[p], po[p + 1]):
             rx, ry = xs[ro[r]:ro[r + 1]], ys[ro[r]:ro[r + 1]]
-            rings.append((rx, ry, KG.ring_is_axis_rect(rx, ry),
+            rings.append((rx, ry, (rx.min(), rx.max(), ry.min(), ry.max()),
+                          KG.ring_is_axis_rect(rx, ry),
                           1.0 if r == po[p] else -1.0))
     hit = np.zeros(len(rx0), bool)
     if len(rings) == len(po) - 1:
         # no hole rings: an axis-rect part hits every tile its bbox
         # strictly overlaps (touch-only excluded)
-        for rx, ry, is_rect, _ in rings:
+        for _, _, bb, is_rect, _ in rings:
             if is_rect:
-                hit |= ((rx.max() > rx0) & (rx.min() < rx1)
-                        & (ry.max() > ry0) & (ry.min() < ry1))
+                hit |= ((bb[1] > rx0) & (bb[0] < rx1)
+                        & (bb[3] > ry0) & (bb[2] < ry1))
     lv = np.nonzero(~hit & (xs.max() > rx0) & (xs.min() < rx1)
                     & (ys.max() > ry0) & (ys.min() < ry1))[0]
     if not len(lv):
@@ -1345,9 +1349,9 @@ def _polygon_hits_rects(xs, ys, ro, po, rx0, ry0, rx1, ry1) -> np.ndarray:
     hit[lv[centers_in]] = True
     for j in lv[~centers_in]:
         area = 0.0
-        for rx, ry, is_rect, sign in rings:
+        for rx, ry, bb, is_rect, sign in rings:
             area += sign * _ring_area_in_rect(
-                rx, ry, is_rect, rx0[j], ry0[j], rx1[j], ry1[j])
+                rx, ry, bb, is_rect, rx0[j], ry0[j], rx1[j], ry1[j])
         hit[j] = area > 0
     return hit
 
