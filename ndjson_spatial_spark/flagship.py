@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.geo import parse_geojson
+from .functions.memo import memo_columns
 from .operators.bbox_fast import (
     assign_tiles_bbox,
     bbox_intersection_join,
@@ -43,12 +44,12 @@ def with_geojson_bbox(df: DataFrame, text_col: str = "__gj") -> DataFrame:
               contract re-expressed over the raw JSON arrays)
       __bminx/__bminy/__bmaxx/__bmaxy/__bpt   flat bbox (null unless fast)
 
-    This is what lets the flagship run with ZERO Python workers: the
-    round-2 stage isolation measured the Arrow parse UDF as the one
-    inverse-scaling stage at high thread counts (2.1s@8 -> 10.2s@32 for
-    identical work), while every pure-JVM stage scaled.  Non-fast rows
-    (Multi*, lines, odd polygons, malformed JSON) are parsed by the full
-    parse_geojson UDF on the rare general branch only.
+    This is what lets the flagship run with ZERO Python workers: run in
+    isolation, the Arrow parse UDF was the one stage whose time grew with
+    the thread count (2.1s@8 -> 10.2s@32 for identical work), while every
+    pure-JVM stage scaled.  Non-fast rows (Multi*, lines, odd polygons,
+    malformed JSON) are parsed by the full parse_geojson UDF on the rare
+    general branch only.
 
     Two Catalyst performance traps, both measured on this exact plan:
 
@@ -66,24 +67,33 @@ def with_geojson_bbox(df: DataFrame, text_col: str = "__gj") -> DataFrame:
       projected columns (never pushed), and any unavoidable derived-column
       filter belongs on a cached frame or a rare branch.
     """
+    for stage in _bbox_stages(text_col):
+        df = df.withColumns(stage)
+    return df.drop("__ptc", "__pg", "__xs", "__ys",
+                   "__minx", "__maxx", "__miny", "__maxy", "__ispt")
+
+
+@memo_columns
+def _bbox_stages(text_col: str) -> list:
+    """with_geojson_bbox's staged projections, in order."""
     text = F.col(text_col)
-    df = df.withColumns({
+    parsed = {
         "__gt": F.get_json_object(text, "$.type"),
         "__ptc": F.from_json(text, "coordinates array<double>")["coordinates"],
         "__pg": F.from_json(
             text, "coordinates array<array<array<double>>>")["coordinates"],
-    })
-    df = df.withColumns({
+    }
+    ring = {
         "__xs": F.transform(F.col("__pg")[0], lambda p: p[0]),
         "__ys": F.transform(F.col("__pg")[0], lambda p: p[1]),
-    })
-    df = df.withColumns({
+    }
+    extent = {
         "__minx": F.array_min("__xs"),
         "__maxx": F.array_max("__xs"),
         "__miny": F.array_min("__ys"),
         "__maxy": F.array_max("__ys"),
         "__ispt": (F.col("__gt") == "Point") & (F.size("__ptc") == 2),
-    })
+    }
     is_rect = (
         (F.col("__gt") == "Polygon")
         & (F.size("__pg") == 1)
@@ -94,9 +104,8 @@ def with_geojson_bbox(df: DataFrame, text_col: str = "__gj") -> DataFrame:
         & (F.col("__maxy") > F.col("__miny"))
     )
     ispt = F.col("__ispt")
-    df = df.withColumn("__fast", F.coalesce(ispt | is_rect, F.lit(False)))
     fast = F.col("__fast")
-    cols = {
+    bbox = {
         # null unless fast: the bbox join's cover explode then drops
         # non-fast rows with no filter (see the pushdown note above)
         "__bminx": F.when(fast & ispt, F.col("__ptc")[0])
@@ -109,9 +118,8 @@ def with_geojson_bbox(df: DataFrame, text_col: str = "__gj") -> DataFrame:
                     .when(fast, F.col("__maxy")),
         "__bpt": F.coalesce(ispt, F.lit(False)),
     }
-    df = df.withColumns(cols)
-    return df.drop("__ptc", "__pg", "__xs", "__ys",
-                   "__minx", "__maxx", "__miny", "__maxy", "__ispt")
+    return [parsed, ring, extent,
+            {"__fast": F.coalesce(ispt | is_rect, F.lit(False))}, bbox]
 
 
 def docs_tile_pipeline(
@@ -127,56 +135,52 @@ def docs_tile_pipeline(
     (parallelism-independent: keyed on crc32(doc_id), so N- and 4N-core
     runs see identical refs — the two-cluster-size scaling requirement).
 
-    Scan budget: ONE pre-pass over the docs table caches the (small) union
-    of ref-sample rows + general-shape rows and counts the latter — so the
-    all-bbox common case plans the pure fast path and pays exactly two
-    scans total (pre-pass + fast stream), with no materialization of the
-    big stream anywhere and NO Python workers at all (classification and
-    bbox extraction are Catalyst JSON expressions, see geojson_bbox_cols).
-    When general shapes exist, their (rare) rows parse with the full UDF
-    and run the exact struct operators; the full stream additionally joins
-    any general-shape refs.
+    Scan budget: ONE plan-time pre-pass over the docs table counts the
+    general-shape rows (and general-shape refs), so the all-bbox common
+    case plans the pure fast path: the ref-sample scan (the broadcast side)
+    plus the fast stream, with no materialization anywhere and NO Python
+    workers at all (classification and bbox extraction are Catalyst JSON
+    expressions, see with_geojson_bbox).  When general shapes exist, the
+    ref sample is cached, their (rare) rows parse with the full UDF and run
+    the exact struct operators; the full stream additionally joins any
+    general-shape refs.
+
+    The Columns are built once per process and parameter set (see
+    functions/memo.py); a repeated build issues only its DataFrame calls
+    and its plan-time job.
     """
-    base = (
-        docs.select("doc_id", F.explode("spans").alias("span"))
-        .where(F.col("span.kind") == "geometry")
-        .select("doc_id", F.col("span.text").alias("__gj"))
-    )
+    c = _pipeline_cols(ref_mod)
+    base = docs.select("doc_id", c["span"]).where(c["is_geom"]).select(
+        "doc_id", c["gj"])
     spans = with_geojson_bbox(base)
     # ref sample: any deterministic, parallelism-independent predicate of
     # the row works; default keys on crc32(doc_id) (uniform over arbitrary
-    # id strings), callers with structured ids may pass their own
-    is_ref = (F.col("__gt") == "Polygon") & (
-        ref_pred if ref_pred is not None
-        else F.crc32(F.col("doc_id")) % ref_mod == 0
-    )
+    # id strings), callers with structured ids may pass their own.  A
+    # caller's predicate is a Column, so it is combined per call.
+    if ref_pred is None:
+        is_ref, n_ref_gen = c["is_ref"], c["n_ref_gen"]
+    else:
+        is_ref = c["is_poly"] & ref_pred
+        n_ref_gen = _ref_general_count(is_ref)
     # count general-shape rows via an AGGREGATE over the projected column —
     # a where() would push the predicate into the scan, re-inlining the
     # whole classification tree per reference (measured 35s/scan vs ~2s).
     # The general-REF existence check rides the SAME aggregate: a ref is
     # non-bbox-shaped iff it is not __fast (the JSON-side axis-rect
     # classification equals the struct-side is_bbox_shape — equivalence
-    # pinned in test_bbox_fast), so one job answers both plan-time
-    # questions instead of two (VERDICT r3 "extra plan-time actions").
-    counts = spans.agg(
-        F.count(F.when(~F.col("__fast"), F.lit(1))).alias("n"),
-        F.count(F.when(is_ref & ~F.col("__fast"), F.lit(1)))
-        .alias("n_ref_gen"),
-    ).collect()[0]
+    # pinned in test_bbox_fast), so one plan-time job answers both
+    # questions.
+    counts = spans.agg(c["n_general"], n_ref_gen).collect()[0]
     n_general = counts["n"]
     n_ref_general = counts["n_ref_gen"]
 
-    # refs: the pushed-down filter is just get_json_object + crc32 (cheap);
-    # the small result caches so later shape-splits cost nothing
-    refs_pre = spans.where(is_ref).cache()
-    refs_fast = (
-        refs_pre.where(F.col("__fast"))
-        .select(
-            F.col("__bminx").alias("__rminx"), F.col("__bminy").alias("__rminy"),
-            F.col("__bmaxx").alias("__rmaxx"), F.col("__bmaxy").alias("__rmaxy"),
-            F.col("__bpt").alias("__rpt"),
-        )
-    )
+    # refs: the pushed-down filter is just get_json_object + crc32 (cheap).
+    # The general branch reads the refs twice more, so only it caches them;
+    # the fast path's one read needs no cache to outlive the query.
+    refs_pre = spans.where(is_ref)
+    if n_general > 0:
+        refs_pre = refs_pre.cache()
+    refs_fast = refs_pre.where(c["fast"]).select(*c["refs_fast"])
     # the fast stream needs NO filter: bbox columns are null-gated by
     # __fast, so non-fast rows vanish at the join's cover explode
     s_fast = spans.select(
@@ -191,23 +195,49 @@ def docs_tile_pipeline(
     # general branch (rare data case): the full parse UDF runs here, over
     # the cached refs and the general-shape rows (an expensive filtered
     # scan — acceptable only because n_general > 0 is the exception)
-    refs = refs_pre.select(parse_geojson("__gj").alias("geom"))
-    s_gen = spans.where(~F.col("__fast")).select(
-        "doc_id", parse_geojson("__gj").alias("geom")
-    )
+    refs = refs_pre.select(c["geom"])
+    s_gen = spans.where(c["not_fast"]).select("doc_id", c["geom"])
     j_gen = spatial_intersection_join(s_gen, refs, res=res).select(
         "doc_id", "geom"
     )
     # general-shape REFS join the full (fast-shaped) stream through the
     # struct path — requires one parse pass over the fast stream
-    refs_gen = refs.where(~is_bbox_shape(F.col("geom")))
+    refs_gen = refs.where(c["not_bbox"])
     if n_ref_general > 0:
-        s_fast_struct = spans.where(F.col("__fast")).select(
-            "doc_id", parse_geojson("__gj").alias("geom")
-        )
+        s_fast_struct = spans.where(c["fast"]).select("doc_id", c["geom"])
         j_cross = spatial_intersection_join(
             s_fast_struct, refs_gen, res=res
         ).select("doc_id", "geom")
         j_gen = j_gen.unionByName(j_cross)
     t_gen = assign_tiles(j_gen, list(zooms)).select(*_OUT)
     return t_fast.unionByName(t_gen)
+
+
+def _ref_general_count(is_ref):
+    return F.count(F.when(is_ref & ~F.col("__fast"), F.lit(1))) \
+        .alias("n_ref_gen")
+
+
+@memo_columns
+def _pipeline_cols(ref_mod: int) -> dict:
+    """docs_tile_pipeline's Columns; `ref_mod` sets the default ref sample."""
+    is_poly = F.col("__gt") == "Polygon"
+    is_ref = is_poly & (F.crc32(F.col("doc_id")) % ref_mod == 0)
+    return {
+        "span": F.explode("spans").alias("span"),
+        "is_geom": F.col("span.kind") == "geometry",
+        "gj": F.col("span.text").alias("__gj"),
+        "is_poly": is_poly,
+        "is_ref": is_ref,
+        "n_general": F.count(F.when(~F.col("__fast"), F.lit(1))).alias("n"),
+        "n_ref_gen": _ref_general_count(is_ref),
+        "fast": F.col("__fast"),
+        "not_fast": ~F.col("__fast"),
+        "refs_fast": [
+            F.col("__bminx").alias("__rminx"), F.col("__bminy").alias("__rminy"),
+            F.col("__bmaxx").alias("__rmaxx"), F.col("__bmaxy").alias("__rmaxy"),
+            F.col("__bpt").alias("__rpt"),
+        ],
+        "geom": parse_geojson("__gj").alias("geom"),
+        "not_bbox": ~is_bbox_shape(F.col("geom")),
+    }

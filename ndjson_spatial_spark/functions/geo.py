@@ -32,6 +32,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..kernels import cells as KC
 from ..kernels import geometry as KG
+from .memo import memo_columns
 
 __all__ = [
     "GEOM_TYPE", "parse_geojson", "st_asgeojson", "st_area", "st_length",
@@ -1139,10 +1140,10 @@ def st_collection_members(geom: pd.DataFrame) -> pd.Series:
 
 def gc_members_expr(geom):
     """array<GEOM_TYPE> of a GeometryCollection's member geometries, PURE
-    Catalyst (round-4): the per-part ``GeometryCollection:T1,T2,...`` tag
-    split + ring-range slices re-expressed as transform/slice over the
-    offset arrays, so collection explode costs no Python worker and stays
-    inside whole-stage codegen.  Contract identical to the
+    Catalyst: the per-part ``GeometryCollection:T1,T2,...`` tag split +
+    ring-range slices expressed as transform/slice over the offset arrays,
+    so collection explode costs no Python worker and stays inside
+    whole-stage codegen.  Contract identical to the
     st_collection_members UDF (members are simple geometries with rebased
     ring_offsets and part_offsets = [0, n_rings])."""
     types = F.split(F.substring_index(geom["geom_type"], ":", -1), ",")
@@ -1173,16 +1174,20 @@ def explode_collections(df: DataFrame, geom_col: str = "geom") -> DataFrame:
     Run this before spatial joins / overlays: the overlay kernels operate
     on simple geometries, and the reference's GEOS likewise refuses
     overlay on collections (mirroring PostGIS/GEOS behavior) — flattening
-    members to first-class rows is the Spark-idiomatic dispatch.  Round-4:
-    single-pass conditional explode over the pure-Catalyst
-    `gc_members_expr` — one scan, zero Python, whole-stage codegen
-    (replaces the round-2 filter-split-union shape, which read the source
-    twice at scale)."""
+    members to first-class rows is the Spark-idiomatic dispatch.  One
+    conditional explode over the pure-Catalyst `gc_members_expr`: one scan,
+    zero Python, whole-stage codegen (splitting the rows into collections
+    and the rest and unioning the two would read the source twice)."""
+    return df.withColumn(geom_col, _gc_explode_col(geom_col))
+
+
+@memo_columns
+def _gc_explode_col(geom_col: str):
     tag = F.col(geom_col)["geom_type"]
     is_gc = tag.isNotNull() & tag.startswith("GeometryCollection:")
     arr = F.when(is_gc, gc_members_expr(F.col(geom_col))) \
         .otherwise(F.array(F.col(geom_col)))
-    return df.withColumn(geom_col, F.explode(arr))
+    return F.explode(arr)
 
 
 def st_point(x_col, y_col):

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells_fn import cell_id_expr
+from ..functions.memo import memo_columns
 from ..kernels.cells import MERC_MAX
 from ..plans.salting import candidate_join, hot_key_plan, key_frequency_sketch
 
@@ -79,18 +80,26 @@ def _with_cover(df: DataFrame, res: int, p: str, cp: str) -> DataFrame:
     """Explode the integer cover ranges of the bbox (prefix `p`) at `res`:
     adds {cp}tx0/{cp}ty0 (range starts, used by the pair-dedup rule), the
     exploded {cp}tx/{cp}ty, and the Morton {cp}cell."""
-    out = df.withColumns({
-        f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res, False),
-        f"{cp}tx1": _tile_index(F.col(f"{p}maxx"), res, False),
-        f"{cp}ty0": _tile_index(F.col(f"{p}maxy"), res, True),
-        f"{cp}ty1": _tile_index(F.col(f"{p}miny"), res, True),
-    })
-    out = out.withColumn(f"{cp}tx", F.explode(F.sequence(f"{cp}tx0", f"{cp}tx1")))
-    out = out.withColumn(f"{cp}ty", F.explode(F.sequence(f"{cp}ty0", f"{cp}ty1")))
-    return out.withColumn(
-        f"{cp}cell",
-        cell_id_expr(F.col(f"{cp}tx"), F.col(f"{cp}ty"), F.lit(res)),
-    ).drop(f"{cp}tx1", f"{cp}ty1")
+    c = _cover_cols(res, p, cp)
+    out = df.withColumns(c["ranges"])
+    out = out.withColumn(f"{cp}tx", c["tx"])
+    out = out.withColumn(f"{cp}ty", c["ty"])
+    return out.withColumn(f"{cp}cell", c["cell"]).drop(f"{cp}tx1", f"{cp}ty1")
+
+
+@memo_columns
+def _cover_cols(res: int, p: str, cp: str) -> dict:
+    return {
+        "ranges": {
+            f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res, False),
+            f"{cp}tx1": _tile_index(F.col(f"{p}maxx"), res, False),
+            f"{cp}ty0": _tile_index(F.col(f"{p}maxy"), res, True),
+            f"{cp}ty1": _tile_index(F.col(f"{p}miny"), res, True),
+        },
+        "tx": F.explode(F.sequence(f"{cp}tx0", f"{cp}tx1")),
+        "ty": F.explode(F.sequence(f"{cp}ty0", f"{cp}ty1")),
+        "cell": cell_id_expr(F.col(f"{cp}tx"), F.col(f"{cp}ty"), F.lit(res)),
+    }
 
 
 def bbox_intersection_join(
@@ -126,13 +135,22 @@ def bbox_intersection_join(
         salt = hot_key_plan(freq, "__scell", hot_threshold, target_per_salt)
     j = candidate_join(s, r, "__scell", broadcast_ref, salt)
 
+    c = _pair_cols()
+    keep_cols = [k for k in stream.columns if not k.startswith("__b")]
+    return j.where(c["corner"]).where(c["keep"]).withColumns(c["out"]).select(
+        *keep_cols, "__iminx", "__iminy", "__imaxx", "__imaxy", "__ipt"
+    )
+
+
+@memo_columns
+def _pair_cols() -> dict:
+    """bbox_intersection_join's pair dedup, refinement and output Columns."""
     # exactly-once pair dedup: a pair shares the rectangle of cells
     # [max(tx0s, tx0r) ..] x [max(ty0s, ty0r) ..]; keep only its corner
-    j = j.where(
+    corner = (
         (F.col("__stx") == F.greatest(F.col("__stx0"), F.col("__qtx0")))
         & (F.col("__sty") == F.greatest(F.col("__sty0"), F.col("__qty0")))
     )
-
     sp, rp = F.col("__bpt"), F.col("__rpt")
     px, py = F.col("__bminx"), F.col("__bminy")
     qx, qy = F.col("__rminx"), F.col("__rminy")
@@ -148,17 +166,14 @@ def bbox_intersection_join(
               & (qy >= F.col("__bminy")) & (qy <= F.col("__bmaxy")))
         .otherwise((ix1 > ix0) & (iy1 > iy0))
     )
-    out = j.where(keep).withColumns({
+    out = {
         "__iminx": F.when(sp, px).when(rp, qx).otherwise(ix0),
         "__iminy": F.when(sp, py).when(rp, qy).otherwise(iy0),
         "__imaxx": F.when(sp, px).when(rp, qx).otherwise(ix1),
         "__imaxy": F.when(sp, py).when(rp, qy).otherwise(iy1),
         "__ipt": sp | rp,
-    })
-    keep_cols = [c for c in stream.columns if not c.startswith("__b")]
-    return out.select(
-        *keep_cols, "__iminx", "__iminy", "__imaxx", "__imaxy", "__ipt"
-    )
+    }
+    return {"corner": corner, "keep": keep, "out": out}
 
 
 def assign_tiles_bbox(
@@ -174,7 +189,15 @@ def assign_tiles_bbox(
     overlap; Morton tile_id).  The zoom axis rides ONE explode so multiple
     zooms still scan the input once.
     """
-    p = prefix
+    c = _tile_cols(tuple(int(z) for z in zooms), prefix)
+    keep_cols = [k for k in df.columns if not k.startswith(prefix)]
+    out = df.withColumn("__z", c["z"]).withColumns(c["ranges"])
+    out = out.withColumn("__ztx", c["tx"]).withColumn("__zty", c["ty"])
+    return out.where(c["keep"]).select(*keep_cols, *c["out"])
+
+
+@memo_columns
+def _tile_cols(zooms: tuple, p: str) -> dict:
     z = F.col("__z")
     n = F.pow(F.lit(2.0), z)
     size = F.lit(2.0 * MERC_MAX) / n
@@ -185,18 +208,6 @@ def assign_tiles_bbox(
         t = F.floor(u * n).cast("long")
         return F.greatest(F.lit(0).cast("long"),
                           F.least((n - 1).cast("long"), t))
-
-    out = df.withColumn(
-        "__z", F.explode(F.array(*[F.lit(int(zz)) for zz in zooms]))
-    )
-    out = out.withColumns({
-        "__ztx0": tidx(F.col(f"{p}minx"), False),
-        "__ztx1": tidx(F.col(f"{p}maxx"), False),
-        "__zty0": tidx(F.col(f"{p}maxy"), True),
-        "__zty1": tidx(F.col(f"{p}miny"), True),
-    })
-    out = out.withColumn("__ztx", F.explode(F.sequence("__ztx0", "__ztx1")))
-    out = out.withColumn("__zty", F.explode(F.sequence("__zty0", "__zty1")))
 
     tminx = F.lit(-MERC_MAX) + F.col("__ztx") * size
     tmaxx = tminx + size
@@ -210,11 +221,21 @@ def assign_tiles_bbox(
         (F.col(f"{p}minx") < tmaxx) & (F.col(f"{p}maxx") > tminx)
         & (F.col(f"{p}miny") < tmaxy) & (F.col(f"{p}maxy") > tminy)
     )
-    keep_cols = [c for c in df.columns if not c.startswith(p)]
-    return out.where(keep).select(
-        *keep_cols,
-        z.cast("int").alias("zoom"),
-        F.col("__ztx").alias("tile_x"),
-        F.col("__zty").alias("tile_y"),
-        cell_id_expr(F.col("__ztx"), F.col("__zty"), z).alias("tile_id"),
-    )
+    return {
+        "z": F.explode(F.array(*[F.lit(zz) for zz in zooms])),
+        "ranges": {
+            "__ztx0": tidx(F.col(f"{p}minx"), False),
+            "__ztx1": tidx(F.col(f"{p}maxx"), False),
+            "__zty0": tidx(F.col(f"{p}maxy"), True),
+            "__zty1": tidx(F.col(f"{p}miny"), True),
+        },
+        "tx": F.explode(F.sequence("__ztx0", "__ztx1")),
+        "ty": F.explode(F.sequence("__zty0", "__zty1")),
+        "keep": keep,
+        "out": [
+            z.cast("int").alias("zoom"),
+            F.col("__ztx").alias("tile_x"),
+            F.col("__zty").alias("tile_y"),
+            cell_id_expr(F.col("__ztx"), F.col("__zty"), z).alias("tile_id"),
+        ],
+    }

@@ -27,11 +27,12 @@ from pyspark.sql.pandas.functions import pandas_udf
 from ..kernels import cells as KC
 from ..kernels import geometry as KG
 from ..functions.geo import GEOM_TYPE, geom_to_batch
+from ..functions.memo import memo, memo_columns
 from ..functions.cells_fn import (
     cell_id_expr,
     make_st_cells_bounds_multi,
 )
-from ..plans.salting import candidate_join, hot_key_plan
+from ..plans.salting import candidate_join, hot_key_plan, key_count
 
 
 def _is_axis_rect(g, minx=None, maxx=None, miny=None, maxy=None) -> "F.Column":
@@ -500,6 +501,14 @@ def _pair_intersection(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
+# Declared nondeterministic so that the optimizer keeps the caller's
+# `geom_type IS NOT NULL` filter above the projection that applies the
+# UDF: a deterministic UDF is substituted into the pushed-down filter and
+# Spark then evaluates the kernel twice per row (two stacked
+# ArrowEvalPython nodes).  The kernel itself is a pure function.
+_pair_intersection = _pair_intersection.asNondeterministic()
+
+
 def auto_resolution(
     df: DataFrame, geom_col: str = "geom", target_cells: float = 2.0,
     sample_rows: int = 2000, default: int = 12,
@@ -511,20 +520,16 @@ def auto_resolution(
     Memoized on the ref plan's semantic hash — repeated joins against the
     same ref frame (the common build-many-queries-off-one-dim pattern) pay
     the sample scan once, not once per join build."""
+    def build():
+        return _auto_resolution_uncached(df, geom_col, target_cells,
+                                         sample_rows, default)
+
     try:
-        key = (df.semanticHash(), geom_col, target_cells, sample_rows)
-        if key in _RES_CACHE:
-            return _RES_CACHE[key]
+        key = (auto_resolution, df.semanticHash(), geom_col, target_cells,
+               sample_rows, default)
     except Exception:
-        key = None
-    res = _auto_resolution_uncached(df, geom_col, target_cells,
-                                    sample_rows, default)
-    if key is not None:
-        _cache_put(_RES_CACHE, key, res)
-    return res
-
-
-_RES_CACHE: dict = {}
+        return build()
+    return memo(key, build)
 
 
 def _auto_resolution_uncached(
@@ -605,35 +610,19 @@ def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
     return st.select(*keep, *c["out"])
 
 
-def _cache_put(cache: dict, key, value):
-    if len(cache) >= 256:
-        cache.clear()
-    cache[key] = value
-    return value
-
-
+@memo_columns
 def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
                 anc_levels: tuple) -> dict:
-    """The staged-terms Column bundle, memoized per (geom_col, res, cap,
-    min_res, anc_levels) — Columns are immutable name-resolved trees, and
-    building the per-cell Morton lambdas costs ~1 s of py4j round trips
-    per spatial-join construction otherwise."""
-    key = (geom_col, res, cap, min_res, anc_levels)
-    got = _TERMS_COLS_CACHE.get(key)
-    if got is not None:
-        return got
+    """The staged-terms Column bundle (building the per-cell Morton lambdas
+    alone costs ~1 s of py4j round trips)."""
     # everything below the bbox stage references only the staged column
     # NAMES, so the (large) cov/anc/ru trees are shared across geometry
     # columns — a second geom_col only rebuilds the two cheap stages
-    core_key = (res, cap, min_res, anc_levels)
-    core = _TERMS_CORE_CACHE.get(core_key)
-    if core is None:
-        core = _cache_put(_TERMS_CORE_CACHE, core_key,
-                          _terms_core(res, cap, min_res, anc_levels))
+    core = _terms_core(res, cap, min_res, anc_levels)
     g = F.col(geom_col)
     valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
     na = F.lit(None).cast("array<long>")
-    return _cache_put(_TERMS_COLS_CACHE, key, {
+    return {
         "bbox": [
             F.array_min(g["x"]).alias("__bb_minx"),
             F.array_max(g["x"]).alias("__bb_maxx"),
@@ -647,9 +636,10 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
             F.when(valid, F.col("__ru")).otherwise(F.lit(res)).cast("int")
             .alias("__res_used"),
         ],
-    })
+    }
 
 
+@memo_columns
 def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple) -> dict:
     # the geometry-independent stages: unit coords, res_used, tile ranges,
     # and the cov/anc arrays over those columns
@@ -719,10 +709,6 @@ def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple) -> dict:
             "cov": cov, "anc": anc}
 
 
-_TERMS_COLS_CACHE: dict = {}
-_TERMS_CORE_CACHE: dict = {}
-
-
 def _coarse_levels(df_terms: DataFrame, res: int) -> list:
     """Distinct below-`res` cover resolutions present in a terms frame — a
     tiny map-side-combinable aggregate (≤ res values) that drives the other
@@ -730,11 +716,16 @@ def _coarse_levels(df_terms: DataFrame, res: int) -> list:
     which keeps the hot path at zero ancestor overhead."""
     rows = (
         df_terms.select("__res_used")
-        .where(F.col("__res_used") < res)
+        .where(_res_below(res))
         .distinct()
         .collect()
     )
     return sorted(r[0] for r in rows)
+
+
+@memo_columns
+def _res_below(res: int):
+    return F.col("__res_used") < res
 
 
 # --------------------------------------------------------- intersection
@@ -796,6 +787,10 @@ def spatial_intersection_join(
     decided while this function runs: `hot_key_plan` runs one eager job
     over a ``sketch_sample_frac`` sample of the stream (all of it when
     None), and its choice is frozen into the returned DataFrame.
+
+    The Columns are built once per process and parameter set
+    (functions/memo.py): a repeated build issues only its DataFrame calls
+    and plan-time jobs.
     """
     # GeometryCollections auto-explode to member rows on BOTH sides: the
     # overlay kernel operates on simple geometries (GC -> null, which
@@ -827,45 +822,18 @@ def spatial_intersection_join(
         if stream.rdd.getNumPartitions() < min(par, 8):
             stream = stream.repartition(par)
 
+    c = _join_cols(geom_col)
     # ref side emits: its cover terms both plain and ancestor-tagged (the
     # tagged copy is what a fine stream row's ancestor terms meet when the
     # REF row coarsened) + its cover's ancestors, plain, at every level
     # coarsening can reach (what a coarsened STREAM row's cover meets).
     r_t = _with_terms(
-        ref.select(F.col(geom_col).alias("__ref_geom"), *keep_ref_cols),
-        "__ref_geom",
+        ref.select(c["ref_geom"], *keep_ref_cols), "__ref_geom",
         res, cap, min_res, range(min_res, res), keep_bbox=True,
     ).withColumnsRenamed({
         "__cov": "__ref_cov", "__anc": "__ref_anc",
         "__res_used": "__ref_res_used",
     })
-
-    # ---- per-SIDE shape metadata, projected before the exchange.  The
-    # refinement below needs, per candidate pair, the shape class (point /
-    # axis-rect / other) and the bbox of each side.  Computed on the
-    # JOINED rows, `_is_axis_rect` (two interpreted `forall` HOFs) plus
-    # four array_min/max per side would run PER CANDIDATE (~200 per input
-    # row); one narrow projection per side (5 scalar columns, 40 bytes)
-    # rides the explode + join instead.  For Points the bbox degenerates
-    # to the point, so the fast-path predicates below need no element_at.
-    # kind codes: 0 = point, 1 = axis rect, 2 = other (null geometry
-    # classifies 2 -> slow path).
-    def _side_meta(df, gcol, p):
-        # the bbox columns are the ones _with_terms staged (keep_bbox=True)
-        # — renamed, not recomputed; the rect test compares against them
-        # as attributes
-        g = F.col(gcol)
-        bb = [F.col(c) for c in
-              ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
-        return df.withColumns({
-            f"__{p}_kind": F.when(g["geom_type"] == "Point", 0)
-            .when(_is_axis_rect(g, bb[0], bb[1], bb[2], bb[3]), 1)
-            .otherwise(2),
-        }).withColumnsRenamed({
-            "__bb_minx": f"__{p}_minx", "__bb_maxx": f"__{p}_maxx",
-            "__bb_miny": f"__{p}_miny", "__bb_maxy": f"__{p}_maxy",
-        })
-
     r_t = _side_meta(r_t, "__ref_geom", "r")
     # Materialize the ref terms frame ONCE.  The ref side (the reference's
     # in-memory R-tree build side) would otherwise re-evaluate its
@@ -881,50 +849,14 @@ def spatial_intersection_join(
     # stream ancestors are only needed at levels where some REF row actually
     # coarsened — usually none (plan-time constant from a tiny distinct agg
     # over the checkpointed ref terms).
-    r_levels = _coarse_levels(
-        r_t.select(F.col("__ref_res_used").alias("__res_used")), res
-    )
+    r_levels = _coarse_levels(r_t.select(c["ref_res_used"]), res)
     s_t = _with_terms(stream, geom_col, res, cap, min_res, r_levels,
                       keep_bbox=True)
     s_t = _side_meta(s_t, geom_col, "s")
 
-    # term emission (see module comment): matches enumerate each candidate
-    # pair once per SHARED term —
-    #   s.cov(plain)  == r.cov(plain)   same-res candidates (the hot path)
-    #   s.cov(plain)  == r.anc(plain)   stream coarsened, ref fine
-    #   s.anc(tagged) == r.cov(tagged)  ref coarsened, stream fine
-    # and never anc == anc (stream cov is never tagged, ref anc never plain).
-    # The tagged cover copy is only emitted for COARSENED ref rows — a fine
-    # row's tagged cells sit at `res` where no stream ancestor ever is, so
-    # skipping them halves the ref-side term fan-out in the common case.
-    s_terms = F.concat(F.col("__cov"), F.transform("__anc", _term_anc))
-    # The coarsened-ref decision is made at PLAN time, not per row: a
-    # per-row `when(res_used < res, ...)` branch inside the generator input
-    # trips a Catalyst nested-column-aliasing bug under Generate
-    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the ref geometry's extracted
-    # struct fields).  `r_levels` is already a plan-time constant: when it
-    # is empty (the common case) the stream emits no ancestor terms at all,
-    # so tagged ref copies could never match — skip them.  When some ref
-    # row did coarsen, emit the tagged copy for EVERY ref row: a fine row's
-    # tagged cells sit at `res` where no stream ancestor term ever is
-    # (ancestors are strictly coarser), so the extra terms cannot match —
-    # they only cost fan-out in the already-uncommon mixed-res case.
-    if r_levels:
-        r_terms = F.concat(
-            F.col("__ref_cov"),
-            F.transform("__ref_cov", _term_anc),
-            F.col("__ref_anc"),
-        )
-    else:
-        r_terms = F.concat(F.col("__ref_cov"), F.col("__ref_anc"))
-    # Explode an ATTRIBUTE, not the term expression itself: Catalyst's
-    # InferFiltersFromGenerate adds a `size(gen) > 0` filter below every
-    # explode, and with the expression inline that filter would
-    # re-evaluate the ENTIRE terms computation (geometry parse UDF
-    # included) once more per row; staged as a column, the inferred
-    # filter tests a cheap attribute and the terms run once.
-    s_c = s_t.withColumn("__term", F.explode(s_terms))
-    r_c = r_t.withColumn("__term", F.explode(r_terms))
+    t = _term_cols(bool(r_levels))
+    s_c = s_t.withColumn("__term", t["s_term"])
+    r_c = r_t.withColumn("__term", t["r_term"])
 
     # Split each SIDE by shape kind BEFORE the join: filtering the JOINED
     # candidates per refinement branch would execute the candidate join
@@ -934,27 +866,8 @@ def spatial_intersection_join(
     # involve a general-shape side are EMPTY whenever the corpus is all
     # points/rects (their inputs are subset filters whose exchanges are
     # shared across sub-joins, and AQE collapses the empty ones).
-    s_f = s_c.where(F.col("__s_kind") < 2)
-    s_s = s_c.where(F.col("__s_kind") == 2)
-    r_f = r_c.where(F.col("__r_kind") < 2)
-    r_s = r_c.where(F.col("__r_kind") == 2)
-
-    # exactly-once pair dedup: keep the match whose join term is the
-    # smallest ENUMERATED shared term (the three disjoint sets above).  A
-    # stream row with exactly ONE term (a point's single level-res cell, no
-    # ancestors — the dominant point-stream shape) meets a given ref row at
-    # most once, because the ref side's enumerated terms (cov +
-    # distinct-level ancestors) are pairwise distinct — so such a pair is
-    # unique and skips the per-candidate array_intersect/array_min work
-    # (Or short-circuits in codegen).
-    min_common = F.array_min(F.concat(
-        F.array_intersect("__cov", "__ref_cov"),
-        F.array_intersect("__cov", "__ref_anc"),
-        F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
-    ))
-    single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
-    drop_cols = ["__term", "__cov", "__anc", "__res_used",
-                 "__ref_cov", "__ref_anc", "__ref_res_used"]
+    s_f, s_s = s_c.where(c["s_fast"]), s_c.where(c["s_slow"])
+    r_f, r_s = r_c.where(c["r_fast"]), r_c.where(c["r_slow"])
 
     salt = None
     if salt_hot_cells and not broadcast_ref:
@@ -971,22 +884,137 @@ def spatial_intersection_join(
             sk = sk.sample(frac, seed=42)
         freq = (
             _with_terms(sk, geom_col, res, cap, min_res, r_levels)
-            .select(F.explode(s_terms).alias("__term"))
+            .select(t["sketch_term"])
             .groupBy("__term")
-            .agg((F.count(F.lit(1)) / F.lit(frac))
-                 .cast("long").alias("key_count"))
+            .agg(key_count(frac))
         )
         salt = hot_key_plan(freq, "__term", hot_threshold, target_per_salt)
 
     def cand_of(ssub, rsub):
         j = candidate_join(ssub, rsub, "__term", broadcast_ref, salt)
-        return j.where(
-            single_term | (F.col("__term") == min_common)
-        ).drop(*drop_cols)
+        return j.where(c["pair_once"]).drop(*_CANDIDATE_SCRATCH)
 
-    # ---- refinement: pure-Catalyst fast paths for the dominant shapes ----
-    # (all predicates read the per-side scalar metadata computed before
-    # the join — zero array ops per candidate on the fast paths)
+    # refinement: pure-Catalyst fast paths for the dominant shapes;
+    # general geometries go through the Arrow-batched exact kernels (the
+    # slow path only ever sees pairs with a non-(point|axis-rect) side —
+    # three sub-joins covering exactly the pairs where either side is
+    # general)
+    def slow_of(ssub, rsub):
+        return cand_of(ssub, rsub).withColumn("__igeom", c["slow_geom"]) \
+            .where(c["slow_keep"])
+
+    fast_out = cand_of(s_f, r_f).where(c["fast_keep"]) \
+        .withColumn("__igeom", c["fast_geom"])
+    slow_out = (
+        slow_of(s_s, r_f)
+        .unionByName(slow_of(s_s, r_s))
+        .unionByName(slow_of(s_f, r_s))
+    )
+    return fast_out.unionByName(slow_out).select(
+        *_out_cols(geom_col, tuple(stream.columns), tuple(keep_ref_cols)))
+
+
+# the per-side candidate columns cand_of drops after the pair dedup
+_CANDIDATE_SCRATCH = ("__term", "__cov", "__anc", "__res_used",
+                      "__ref_cov", "__ref_anc", "__ref_res_used")
+
+
+def _side_meta(df: DataFrame, gcol: str, p: str) -> DataFrame:
+    """Per-SIDE shape metadata, projected before the exchange.  The
+    refinement needs, per candidate pair, the shape class (point /
+    axis-rect / other) and the bbox of each side.  Computed on the JOINED
+    rows, `_is_axis_rect` (two interpreted `forall` HOFs) plus four
+    array_min/max per side would run PER CANDIDATE (~200 per input row);
+    one narrow projection per side (5 scalar columns, 40 bytes) rides the
+    explode + join instead.  For Points the bbox degenerates to the point,
+    so the fast-path predicates need no element_at.  Kind codes: 0 =
+    point, 1 = axis rect, 2 = other (a null geometry classifies 2 -> slow
+    path).  The bbox columns are the ones _with_terms staged
+    (keep_bbox=True): renamed, not recomputed; the rect test compares
+    against them as attributes."""
+    return df.withColumns(_side_kind(gcol, p)).withColumnsRenamed({
+        "__bb_minx": f"__{p}_minx", "__bb_maxx": f"__{p}_maxx",
+        "__bb_miny": f"__{p}_miny", "__bb_maxy": f"__{p}_maxy",
+    })
+
+
+@memo_columns
+def _side_kind(gcol: str, p: str) -> dict:
+    g = F.col(gcol)
+    bb = [F.col(c) for c in
+          ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
+    return {
+        f"__{p}_kind": F.when(g["geom_type"] == "Point", 0)
+        .when(_is_axis_rect(g, bb[0], bb[1], bb[2], bb[3]), 1)
+        .otherwise(2),
+    }
+
+
+@memo_columns
+def _term_cols(mixed: bool) -> dict:
+    """The exploded join terms of each side; `mixed` is True when some ref
+    row's cover coarsened below `res`."""
+    # term emission (see the comment above `_term_anc`): matches enumerate
+    # each candidate pair once per SHARED term —
+    #   s.cov(plain)  == r.cov(plain)   same-res candidates (the hot path)
+    #   s.cov(plain)  == r.anc(plain)   stream coarsened, ref fine
+    #   s.anc(tagged) == r.cov(tagged)  ref coarsened, stream fine
+    # and never anc == anc (stream cov is never tagged, ref anc never
+    # plain).
+    s_terms = F.concat(F.col("__cov"), F.transform("__anc", _term_anc))
+    # The coarsened-ref decision is made at PLAN time, not per row: a
+    # per-row `when(res_used < res, ...)` branch inside the generator input
+    # trips a Catalyst nested-column-aliasing bug under Generate
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the ref geometry's extracted
+    # struct fields).  With no coarsened ref row (the common case) the
+    # stream emits no ancestor terms at all, so tagged ref copies could
+    # never match — skip them.  Otherwise emit the tagged copy for EVERY
+    # ref row: a fine row's tagged cells sit at `res` where no stream
+    # ancestor term ever is (ancestors are strictly coarser), so the extra
+    # terms cannot match — they only cost fan-out in the already-uncommon
+    # mixed-res case.
+    if mixed:
+        r_terms = F.concat(
+            F.col("__ref_cov"),
+            F.transform("__ref_cov", _term_anc),
+            F.col("__ref_anc"),
+        )
+    else:
+        r_terms = F.concat(F.col("__ref_cov"), F.col("__ref_anc"))
+    # Explode an ATTRIBUTE, not the term expression itself: Catalyst's
+    # InferFiltersFromGenerate adds a `size(gen) > 0` filter below every
+    # explode, and with the expression inline that filter would
+    # re-evaluate the ENTIRE terms computation (geometry parse UDF
+    # included) once more per row; staged as a column, the inferred
+    # filter tests a cheap attribute and the terms run once.
+    return {
+        "s_term": F.explode(s_terms),
+        "r_term": F.explode(r_terms),
+        "sketch_term": F.explode(s_terms).alias("__term"),
+    }
+
+
+@memo_columns
+def _join_cols(geom_col: str) -> dict:
+    """spatial_intersection_join's geometry-independent Columns: ref
+    projection, per-kind split, pair dedup and refinement."""
+    # exactly-once pair dedup: keep the match whose join term is the
+    # smallest ENUMERATED shared term (the three disjoint sets above).  A
+    # stream row with exactly ONE term (a point's single level-res cell, no
+    # ancestors — the dominant point-stream shape) meets a given ref row at
+    # most once, because the ref side's enumerated terms (cov +
+    # distinct-level ancestors) are pairwise distinct — so such a pair is
+    # unique and skips the per-candidate array_intersect/array_min work
+    # (Or short-circuits in codegen).
+    min_common = F.array_min(F.concat(
+        F.array_intersect("__cov", "__ref_cov"),
+        F.array_intersect("__cov", "__ref_anc"),
+        F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
+    ))
+    single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
+
+    # the fast-path predicates read the per-side scalar metadata computed
+    # before the join — zero array ops per candidate
     sg = F.col(geom_col)
     rg = F.col("__ref_geom")
     SK, RK = F.col("__s_kind"), F.col("__r_kind")
@@ -1006,7 +1034,6 @@ def spatial_intersection_join(
             F.array(F.lit(0), F.lit(1)).alias("part_offsets"),
         )
 
-    fast = cand_of(s_f, r_f)
     # point bboxes degenerate to the point itself, so px == __s_minx etc.
     fast_keep = (
         F.when((SK == 1) & (RK == 1), (ix1 > ix0) & (iy1 > iy0))
@@ -1023,26 +1050,27 @@ def spatial_intersection_join(
         .when((SK == 1) & (RK == 0), rg)
         .otherwise(sg)  # pr / pp: the stream point survives
     )
-    fast_out = fast.where(fast_keep).withColumn("__igeom", fast_geom)
+    return {
+        "ref_geom": F.col(geom_col).alias("__ref_geom"),
+        "ref_res_used": F.col("__ref_res_used").alias("__res_used"),
+        "s_fast": F.col("__s_kind") < 2,
+        "s_slow": F.col("__s_kind") == 2,
+        "r_fast": F.col("__r_kind") < 2,
+        "r_slow": F.col("__r_kind") == 2,
+        "pair_once": single_term | (F.col("__term") == min_common),
+        "fast_keep": fast_keep,
+        "fast_geom": fast_geom,
+        "slow_geom": _pair_intersection(sg, rg),
+        "slow_keep": F.col("__igeom.geom_type").isNotNull(),
+    }
 
-    # general geometries: Arrow-batched exact kernels (the slow path only
-    # ever sees pairs with a non-(point|axis-rect) side — three sub-joins
-    # covering exactly the pairs where either side is general)
-    slow = (
-        cand_of(s_s, r_f)
-        .unionByName(cand_of(s_s, r_s))
-        .unionByName(cand_of(s_f, r_s))
-    )
-    slow_out = slow.withColumn(
-        "__igeom", _pair_intersection(sg, rg)
-    ).where(F.col("__igeom.geom_type").isNotNull())
 
-    refined = fast_out.unionByName(slow_out)
-    out_cols = [
+@memo_columns
+def _out_cols(geom_col: str, stream_cols: tuple, keep_ref_cols: tuple):
+    return [
         F.col("__igeom").alias(geom_col) if c == geom_col else F.col(c)
-        for c in stream.columns
+        for c in stream_cols
     ] + [F.col(c) for c in keep_ref_cols]
-    return refined.select(*out_cols)
 
 
 # -------------------------------------------------------------- contains
@@ -1614,6 +1642,10 @@ def _clip_to_cell(g: pd.DataFrame, bounds: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
+# nondeterministic for the reason given at `_pair_intersection`
+_clip_to_cell = _clip_to_cell.asNondeterministic()
+
+
 def subdivide_polygons(
     df: DataFrame,
     geom_col: str = "geom",
@@ -1666,10 +1698,9 @@ def subdivide_polygons(
     # filter on the discriminator field, not the struct
     clipped = poly.withColumn(geom_col, _clip_to_cell(gx, bounds)) \
         .where(F.col(geom_col)["geom_type"].isNotNull())
-    # round-6 (advisor note): NULL-geometry rows made is_poly NULL, so
-    # both branches dropped them, contradicting the documented
-    # "non-polygon rows pass through unchanged" — coalesce routes them to
-    # the passthrough branch (with null cell_x/cell_y from the null bbox)
+    # a NULL geometry makes is_poly NULL, which both branches would drop;
+    # coalesce routes such rows to the passthrough branch (with null
+    # cell_x/cell_y from the null bbox), as documented above
     passthrough = df.where(~F.coalesce(is_poly, F.lit(False))).select(
         "*",
         F.floor(minx / cell).cast("long").alias("cell_x"),

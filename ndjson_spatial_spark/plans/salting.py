@@ -23,20 +23,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["key_frequency_sketch", "salt_plan", "apply_salt_scatter",
-           "apply_salt_replicate", "hot_key_plan", "candidate_join"]
+from ..functions.memo import memo_columns
+
+__all__ = ["key_frequency_sketch", "key_count", "salt_plan",
+           "apply_salt_scatter", "apply_salt_replicate", "hot_key_plan",
+           "candidate_join"]
 
 
 def key_frequency_sketch(df: DataFrame, key: str, sample_frac: float | None = None) -> DataFrame:
     """(key, count) frequencies; sample_frac for a cheap approximate sketch
     at scale (counts scaled back up)."""
     src = df.sample(sample_frac, seed=42) if sample_frac else df
-    counts = src.groupBy(key).agg(F.count(F.lit(1)).alias("key_count"))
-    if sample_frac:
-        counts = counts.withColumn(
-            "key_count", (F.col("key_count") / sample_frac).cast("long")
-        )
-    return counts
+    return src.groupBy(key).agg(key_count(sample_frac or 1.0))
+
+
+@memo_columns
+def key_count(scale: float = 1.0):
+    """The sketch's `key_count` aggregate: rows per group, divided by
+    `scale` (the sampled fraction) when that is not 1."""
+    n = F.count(F.lit(1))
+    if scale != 1.0:
+        n = (n / scale).cast("long")
+    return n.alias("key_count")
 
 
 def salt_plan(
@@ -47,43 +55,51 @@ def salt_plan(
 ) -> DataFrame:
     """Hot keys -> salt factor.  Returned DF is small by construction (only
     keys above hot_threshold) and is broadcast by the join."""
-    return (
-        freq.where(F.col("key_count") > hot_threshold)
-        .select(
+    c = _plan_cols(key, hot_threshold, target_per_salt, max_factor)
+    return freq.where(c["hot"]).select(*c["out"])
+
+
+@memo_columns
+def _plan_cols(key: str, hot_threshold: int, target_per_salt: int,
+               max_factor: int) -> dict:
+    return {
+        "hot": F.col("key_count") > hot_threshold,
+        "out": [
             F.col(key),
             F.least(
                 F.ceil(F.col("key_count") / target_per_salt), F.lit(max_factor)
             ).cast("int").alias("salt_factor"),
-        )
-    )
+        ],
+    }
 
 
 def apply_salt_scatter(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
     """Probe side: hot-key rows get a uniform random salt in [0, factor);
     cold keys get salt 0.  Adds `__salt`."""
     j = df.join(F.broadcast(plan), key, "left")
-    return j.withColumn(
-        "__salt",
-        F.when(
-            F.col("salt_factor").isNotNull(),
-            (F.rand(seed=42) * F.col("salt_factor")).cast("int"),
-        ).otherwise(F.lit(0)),
-    ).drop("salt_factor")
+    return j.withColumn("__salt", _salt_cols()["scatter"]).drop("salt_factor")
 
 
 def apply_salt_replicate(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
     """Build side: hot-key rows are replicated once per salt; cold keys get
     the single salt 0.  Adds `__salt`."""
     j = df.join(F.broadcast(plan), key, "left")
-    return j.withColumn(
-        "__salt",
-        F.explode(
-            F.when(
-                F.col("salt_factor").isNotNull(),
-                F.sequence(F.lit(0), F.col("salt_factor") - 1),
-            ).otherwise(F.array(F.lit(0)))
+    return j.withColumn("__salt", _salt_cols()["replicate"]) \
+        .drop("salt_factor")
+
+
+@memo_columns
+def _salt_cols() -> dict:
+    hot = F.col("salt_factor").isNotNull()
+    return {
+        "scatter": F.when(
+            hot, (F.rand(seed=42) * F.col("salt_factor")).cast("int"),
+        ).otherwise(F.lit(0)),
+        "replicate": F.explode(
+            F.when(hot, F.sequence(F.lit(0), F.col("salt_factor") - 1))
+            .otherwise(F.array(F.lit(0)))
         ),
-    ).drop("salt_factor")
+    }
 
 
 def hot_key_plan(

@@ -184,6 +184,19 @@ class TestEquivalenceWithStructOperators:
         plan = tiles._jdf.queryExecution().executedPlan().toString()
         assert "Python" not in plan, plan
 
+    def test_all_bbox_flagship_leaves_nothing_persisted(self, spark, tmp_path):
+        # the all-bbox path reads its ref sample once, so it caches nothing
+        # that would outlive the query
+        from ndjson_spatial_spark.flagship import docs_tile_pipeline
+
+        pq = str(tmp_path / "docs.parquet")
+        synth_documents(spark, n_docs=300, seed=9, partitions=2) \
+            .write.parquet(pq)
+        jsc = spark.sparkContext._jsc
+        before = len(jsc.getPersistentRDDs())
+        assert docs_tile_pipeline(spark.read.parquet(pq), ref_mod=7).collect()
+        assert len(jsc.getPersistentRDDs()) == before
+
     def test_shuffle_path_identical(self, spark, pipelines):
         geoms, refs = pipelines
         flat = flat_bbox(geoms.select("doc_id", "geom")).drop("geom")

@@ -74,6 +74,44 @@ class TestCodegen:
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
 
+def _udf_nodes(plan: str, name: str) -> int:
+    return plan.count(f"ArrowEvalPython [{name}(")
+
+
+class TestUdfOncePerApplication:
+    """A refinement UDF whose result is then filtered on must run once per
+    row: each application is one ArrowEvalPython node, not a second copy
+    pushed down into the filter."""
+
+    def test_pair_intersection_once_per_slow_branch(self, spark):
+        from ndjson_spatial_spark.functions.geo import GEOM_TYPE, st_point
+        from ndjson_spatial_spark.operators.spatial import spatial_intersection_join
+
+        pts = spark.range(10).select(
+            "id", st_point(F.col("id") * 100.0, F.col("id") * 100.0).alias("geom"))
+        ell = ("Polygon", [0.0, 800.0, 800.0, 300.0, 300.0, 0.0, 0.0],
+               [0.0, 0.0, 300.0, 300.0, 800.0, 800.0, 0.0], [0, 7], [0, 1])
+        ref = spark.createDataFrame([(ell,)], f"geom {GEOM_TYPE.simpleString()}")
+        df = spatial_intersection_join(pts, ref, res=12)
+        # three slow sub-joins (general stream x fast ref, general x
+        # general, fast stream x general ref), one application each
+        assert _udf_nodes(plan_of(df), "_pair_intersection") == 3
+        got = {r["id"] for r in df.collect()}
+        assert {1, 2} <= got and not got & {4, 5, 6, 7, 8, 9}
+
+    def test_clip_to_cell_once(self, spark):
+        from ndjson_spatial_spark.functions.geo import GEOM_TYPE
+        from ndjson_spatial_spark.operators.spatial import subdivide_polygons
+
+        sq = ("Polygon", [0.0, 10.0, 10.0, 0.0, 0.0],
+              [0.0, 0.0, 10.0, 10.0, 0.0], [0, 5], [0, 1])
+        df = subdivide_polygons(
+            spark.createDataFrame([(sq,)], f"geom {GEOM_TYPE.simpleString()}"),
+            cell=4.0)
+        assert _udf_nodes(plan_of(df), "_clip_to_cell") == 1
+        assert df.count() == 9
+
+
 class TestGcExplodePlan:
     def test_gc_explode_is_pure_catalyst(self, spark):
         # round-4: the auto-explode of GeometryCollections inside the
